@@ -32,19 +32,13 @@ def main() -> None:
     args = ap.parse_args()
     seeds = [int(s) for s in args.seeds.split(",") if s]
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from unipdf_spark import pipeline
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("deep-soak")
-        .config("spark.sql.shuffle.partitions", str(args.cpus))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+    spark = pipeline.get_spark("deep-soak", cores=args.cpus)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
     spark.sparkContext.setLogLevel("ERROR")
 
     overall = {"docs_per_seed": args.docs, "seeds": {}, "total_violations": 0}

@@ -35,17 +35,3 @@ def dot(a, b) -> Column:
 
 def cosine(a, b) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
-def content_fingerprint(col) -> Column:
-    """Order-insensitive md5 fingerprint over the sorted distinct token set."""
-    norm = F.lower(F.regexp_replace(col, r"[^A-Za-z0-9 ]", " "))
-    t = F.filter(F.split(norm, r"\s+"), lambda x: x != "")
-    return F.md5(F.array_join(F.array_sort(F.array_distinct(t)), " "))
-
-
-def span_text_length(spans) -> Column:
-    """Total text length of a spans array (schema.py span struct)."""
-    return F.aggregate(
-        spans, F.lit(0), lambda acc, s: acc + F.length(s["text"])
-    )

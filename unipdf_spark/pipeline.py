@@ -53,6 +53,9 @@ def get_spark(app: str = "unipdf-spark", cores: int | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # forked workers skip re-reading pyspark.zip on every task
+        # (worker_daemon.py)
+        .config("spark.python.daemon.module", "unipdf_spark.worker_daemon")
     )
     for k, v in ARROW_BATCH_CONF.items():
         b = b.config(k, v)
@@ -142,29 +145,6 @@ def docs_pdf_from_documents(spark: SparkSession, sf_dir: str,
           "media_ref:string,offset:int>>"
     )
     return docs.mapInPandas(render_batch, schema=out_schema)
-
-
-def docs_pdf_from_text(docs: DataFrame) -> DataFrame:
-    """(doc_id string, text) → rendered PDFs (distributed), WITHOUT golden
-    spans: the render stage for text→PDF→extract→curate round trips
-    (operators.extracted), where correctness is proven downstream against
-    the original text instead of per-span goldens — leaner Arrow traffic."""
-
-    def render_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .fixtures import gen
-
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                golden, pdf_bytes = gen.make_text_doc(doc_id, text or "")
-                rows.append((doc_id, pdf_bytes, len(golden), "external_text"))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pdf_bytes", "n_spans", "fixture_class"],
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(
-        render_batch, schema=schema.DOCS_PDF_DDL)
 
 
 def docs_pdf_from_spans_table(docs: DataFrame) -> DataFrame:

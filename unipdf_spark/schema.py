@@ -2,8 +2,8 @@
 
 This is the ONLY module the fixture generator and the extractor are allowed to
 share (FIXTURES.md: "Generator and extractor share only the span schema").
-Kept import-light: pyspark is imported lazily so the pure-Python PDF core can
-use `media_ref_for` inside Arrow workers without driver-side baggage.
+Kept import-light (stdlib only) so the pure-Python PDF core can use
+`media_ref_for` inside Arrow workers without driver-side baggage.
 
 Schema (authoritative, BASELINE.json input_hint):
     docs(doc_id: string,
@@ -55,10 +55,3 @@ DOCS_DDL = (
 def media_ref_for(raw_stream_bytes: bytes) -> str:
     """Deterministic media reference for an image payload (see module doc)."""
     return "img_" + hashlib.sha256(raw_stream_bytes).hexdigest()[:16]
-
-
-def spark_span_schema():
-    """Structured spans_out schema as pyspark types (lazy import)."""
-    from pyspark.sql import types as T
-
-    return T._parse_datatype_string(SPANS_OUT_DDL)
