@@ -1,6 +1,9 @@
+import re
+
 import pytest
 
 from unipdf_spark.fixtures import make_doc
+from unipdf_spark.pdf.content import Operation, _parse_inline_image
 from unipdf_spark.pdf.cos import Lexer, Name, PdfDocument, PdfError, Ref
 
 
@@ -600,13 +603,84 @@ def test_object_cache_second_pass_identical():
             assert r.spans == golden, (pass_no, cls)
 
 
+# --- reference content tokenizer ---------------------------------------------
+
+_OPRE = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
+_NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
+
+
+def parse_content_reference(data: bytes) -> list[Operation]:
+    """Pre-r11 per-token Lexer implementation of ``content.parse_content``,
+    kept as the behavioral reference: the tests below A/B the fast
+    tokenizer against it over the full fixture-class corpus (byte-identical
+    Operation lists required)."""
+    ops: list[Operation] = []
+    lx = Lexer(data, 0)
+    params: list = []
+    n = len(data)
+    while True:
+        lx.skip_ws()
+        if lx.pos >= n:
+            break
+        c = data[lx.pos]
+        try:
+            if c == 0x2F or c == 0x28 or c == 0x5B or c in b"+-.0123456789":
+                params.append(_parse_operand(lx))
+                continue
+            if c == 0x3C:
+                if data.startswith(b"<<", lx.pos):
+                    d = lx.parse_dict()
+                    params.append(d)
+                else:
+                    params.append(lx.parse_hex_string())
+                continue
+        except PdfError:
+            # relaxed: skip one byte and continue
+            lx.pos += 1
+            continue
+        m = _OPRE.match(data, lx.pos)
+        if not m:
+            lx.pos += 1  # stray delimiter — skip
+            continue
+        op = m.group().decode("latin-1")
+        lx.pos = m.end()
+        if op == "BI":
+            img = _parse_inline_image(lx)
+            ops.append(Operation("BI", [img]))
+            params = []
+            continue
+        if op in ("true", "false", "null"):
+            params.append(None if op == "null" else op == "true")
+            continue
+        ops.append(Operation(op, params))
+        params = []
+    return ops
+
+
+def _parse_operand(lx: Lexer):
+    c = lx.data[lx.pos]
+    if c == 0x2F:
+        return lx.parse_name()
+    if c == 0x28:
+        return lx.parse_literal_string()
+    if c == 0x5B:
+        # content-stream arrays contain no indirect refs — reuse cos parser
+        return lx.parse_array()
+    m = _NUM_RE.match(lx.data, lx.pos)
+    if not m:
+        raise PdfError(f"bad operand at {lx.pos}")
+    tok = m.group()
+    lx.pos = m.end()
+    return float(tok) if b"." in tok else int(tok)
+
+
 def test_content_tokenizer_matches_reference_impl():
     """r11 optimization guard: the single-regex content tokenizer must
     produce byte-identical Operation lists to the pre-r11 per-token Lexer
     implementation across every fixture class (the full corpus A/B ran
     2107 streams / 0 divergent at the time of the change)."""
     from unipdf_spark.fixtures.gen import FIXTURE_CLASSES, make_doc
-    from unipdf_spark.pdf.content import parse_content, parse_content_reference
+    from unipdf_spark.pdf.content import parse_content
     from unipdf_spark.pdf.cos import PdfDocument
 
     n = 0
@@ -624,7 +698,7 @@ def test_content_tokenizer_edge_tokens():
     """Edge lexemes through both tokenizer implementations: hex-escaped
     names, comments, booleans/null, hex strings, nested arrays/dicts,
     malformed operands (relaxed skip)."""
-    from unipdf_spark.pdf.content import parse_content, parse_content_reference
+    from unipdf_spark.pdf.content import parse_content
 
     cases = [
         b"/N#41me 1 .5 -2. +3 Tf % comment\n(str\\)par) Tj",

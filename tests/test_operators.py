@@ -876,7 +876,7 @@ def test_oversized_doc_split_roundtrip(spark):
     # every part atom is bounded (the whole point)
     assert all(len(r["text"]) <= PART_CHARS + 50 for r in by_doc[2])
     assert all(r["error"] is None for r in rows)
-    assert all(r["elapsed_ms"] >= 0 for r in rows)
+    assert all(r["elapsed_ms"] > 0 for r in rows)
 
     ws = re.compile(r"\s+")
     out = {r["doc_id"]: r["text"] for r in reassemble_parts(pe).collect()}

@@ -292,3 +292,102 @@ def test_span_equality_digest_corpus_ab(spark):
     assert {"doc_00000000", "doc_00000001", drop_id} <= bad
     docs_pdf.unpersist()
     spans_out.unpersist()
+
+
+# --- map_rows: the one Arrow-batched Python stage ----------------------------
+
+
+def _fan_out():
+    # built inside a function so cloudpickle ships it by value (the test
+    # module itself is not importable in Python workers)
+    def fan_out(n, word):
+        """Emits ``n`` rows — 0, 1 or many per input row."""
+        for i in range(n):
+            yield f"{word}{i}", i
+
+    return fan_out
+
+
+def test_map_rows_zero_one_many_rows_in_ddl_order(spark):
+    src = spark.createDataFrame(
+        [(0, "a"), (1, "b"), (3, "c"), (0, "d")], "n int, word string")
+    out = pipeline.map_rows(src, _fan_out(), "tag string, i int")
+    assert out.columns == ["tag", "i"]
+    assert sorted(map(tuple, out.collect())) == [
+        ("b0", 0), ("c0", 0), ("c1", 1), ("c2", 2)]
+    # a batch whose rows all emit nothing still yields a typed, empty frame
+    none = pipeline.map_rows(src.filter(F.col("n") == 0), _fan_out(),
+                             "tag string, i int")
+    assert none.collect() == []
+    assert none.schema.simpleString() == "struct<tag:string,i:int>"
+
+
+def test_map_rows_plan_names_the_row_function(spark):
+    from unipdf_spark.plans import explain_str
+
+    src = spark.createDataFrame([(1, "a")], "n int, word string")
+    out = pipeline.map_rows(src, _fan_out(), "tag string, i int")
+    txt = explain_str(out)
+    args = [ln for ln in txt.splitlines() if ln.startswith("Arguments: ")
+            and "fan_out(" in ln]
+    assert "MapInPandas" in txt and len(args) == 1, txt
+
+
+def test_map_rows_owns_every_mapinpandas_call():
+    """Source guard: every Arrow-batched Python stage in the package is a
+    per-row function handed to pipeline.map_rows; no module grows its own
+    ``mapInPandas`` batch loop again."""
+    import ast
+    from pathlib import Path
+
+    root = Path(pipeline.__file__).resolve().parent
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "mapInPandas"):
+                    calls.append((str(path.relative_to(root)),
+                                  getattr(top, "name", None)))
+    assert calls == [("pipeline.py", "map_rows")]
+
+
+def test_elapsed_ms_type_agrees_across_stages(spark, tmp_path):
+    """Every stage's per-row ``elapsed_ms`` lineage column has one type
+    (double: sub-millisecond rows must not truncate to 0)."""
+    from unipdf_spark.operators.extracted import render_extract_parts
+    from unipdf_spark.real_corpus import extract_corpus, read_corpus_dir
+
+    (tmp_path / "a.pdf").write_bytes(b"%PDF-1.4\n")
+    named = spark.createDataFrame([("doc_00000001", "x")],
+                                  "doc_id string, text string")
+    outs = {
+        "run_extraction": pipeline.run_extraction(
+            pipeline.gen_docs_pdf(spark, 1, partitions=1)),
+        "render_extract_parts": render_extract_parts(named),
+        "extract_corpus": extract_corpus(
+            read_corpus_dir(spark, str(tmp_path))),
+    }
+    types = {k: df.schema["elapsed_ms"].dataType.simpleString()
+             for k, df in outs.items()}
+    assert set(types.values()) == {"double"}, types
+
+
+def test_run_list_extraction_matches_engine(spark):
+    """The `lists` CLI stage: one row per (list, item), equal to the
+    engine's extract_lists on the same PDFs; untagged docs emit none."""
+    from unipdf_spark.pdf.extract import extract_lists
+
+    docs = pipeline.gen_docs_pdf(
+        spark, 6, mix=[("tagged_list", 1), ("simple", 1)], partitions=2
+    ).persist()
+    got = sorted(map(tuple, pipeline.run_list_extraction(docs).collect()))
+    want = sorted(
+        (r["doc_id"], li, ii, item["label"], item["body"])
+        for r in docs.collect()
+        for li, lst in enumerate(extract_lists(bytes(r["pdf_bytes"])))
+        for ii, item in enumerate(lst["items"]))
+    docs.unpersist()
+    assert got == want and {r[0] for r in got}

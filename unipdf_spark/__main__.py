@@ -99,31 +99,8 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"cells": spark.read.parquet(args.out).count(),
                               "out": args.out}))
         elif args.cmd == "lists":
-            import pandas as pd  # noqa: F401 — worker dependency
-
             docs = spark.read.parquet(args.inp)
-
-            def list_batch(batches):
-                import pandas as pd
-
-                from .pdf.extract import extract_lists
-
-                for b in batches:
-                    rows = []
-                    for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-                        for lidx, lst in enumerate(extract_lists(bytes(pdf_bytes))):
-                            for iidx, item in enumerate(lst["items"]):
-                                rows.append((doc_id, lidx, iidx,
-                                             item["label"], item["body"]))
-                    yield pd.DataFrame(
-                        rows, columns=["doc_id", "list_idx", "item_idx",
-                                       "label", "body"])
-
-            out = docs.select("doc_id", "pdf_bytes").mapInPandas(
-                list_batch,
-                "doc_id string, list_idx int, item_idx int, label string, "
-                "body string",
-            )
+            out = pipeline.run_list_extraction(docs)
             out.write.mode("overwrite").parquet(args.out)
             print(json.dumps({"items": spark.read.parquet(args.out).count(),
                               "out": args.out}))

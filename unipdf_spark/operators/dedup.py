@@ -23,8 +23,13 @@ DuckDB evaluates to identical values.
 
 from __future__ import annotations
 
+import hashlib
+import math
+import re
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..pipeline import map_rows
 from . import phash
 
 N_HASHES = 32
@@ -33,6 +38,7 @@ MAX_BUCKET = 64  # LSH bucket cap (skew armor)
 SIM_BITS = 60  # SimHash width (= portable base60 hash width)
 SIM_CHUNKS = 4  # 15-bit chunks → Hamming ≤ 3 guarantees a shared chunk
 MAX_HAMMING = 3
+_ASCII_WS = re.compile(r"\s+", re.ASCII)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,13 +189,36 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SIG_FIELDS = ", ".join(f"h{i} long" for i in range(N_HASHES))
 
 
+def _tokens(text: str) -> list[str]:
+    """Non-empty ``re.ASCII`` ``\\s+`` tokens of ``text.lower()`` — Java's
+    and RE2's ``\\s`` are ASCII-only, so the Python pattern must be too."""
+    return [t for t in _ASCII_WS.split(text.lower()) if t]
+
+
+def _shingle_set(text: str) -> set[str]:
+    """Distinct word 3-gram shingles (the ``_SHINGLE_CTE`` oracle's)."""
+    toks = _tokens(text)
+    return {" ".join(toks[j : j + 3])
+            for j in range(max(len(toks) - 3, 0) + 1)}
+
+
+def _md5_60(strings):
+    """int64 array of ``int(md5(s)[:15], 16)`` per string (< 2^60)."""
+    import numpy as np
+
+    return np.fromiter(
+        (int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+         for s in strings),
+        dtype=np.int64, count=len(strings))
+
+
 def minhash_signatures_pandas(d: DataFrame) -> DataFrame:
-    """(doc_id, text, …) → (doc_id, h0..h31) via mapInPandas: Python-side
+    """(doc_id, text, …) → (doc_id, h0..h31) via map_rows: Python-side
     tokenize → 3-gram shingles → md5-derived h32 → one numpy (n_shingles ×
     32) modular matmul-min. Bit-identical to MINHASH_SIG_SQL:
 
-    * tokens: ``re.ASCII`` ``\\s+`` split of ``text.lower()`` — Java's and
-      RE2's ``\\s`` are ASCII-only, so the Python pattern must be too;
+    * tokens: :func:`_tokens` (``re.ASCII`` ``\\s+`` split of
+      ``text.lower()``);
     * shingle hash: ``int(md5(s)[:15], 16) % P`` ≡ Spark
       ``conv(substr(md5(s),1,15),16,10)`` ≡ DuckDB
       ``('0x'||substr(md5(s),1,15))::BIGINT`` (< 2^60, exact in int64);
@@ -201,75 +230,33 @@ def minhash_signatures_pandas(d: DataFrame) -> DataFrame:
     b_arr = np.array(phash.B, dtype=np.int64)
     p = phash.P
 
-    def batches(pdfs):
-        import hashlib
-        import re
-
-        import pandas as pd
-
-        ws = re.compile(r"\s+", re.ASCII)
-        for pdf in pdfs:
-            n = len(pdf)
-            sigs = np.empty((n, N_HASHES), dtype=np.int64)
-            texts = pdf["text"].tolist()
-            for i, text in enumerate(texts):
-                toks = [t for t in ws.split(text.lower()) if t]
-                end = max(len(toks) - 3, 0) + 1
-                sh = {" ".join(toks[j : j + 3]) for j in range(end)}
-                hs = np.fromiter(
-                    (
-                        int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15],
-                            16) % p
-                        for s in sh
-                    ),
-                    dtype=np.int64,
-                    count=len(sh),
-                )
-                # per-doc (n_shingles × 32) op, NOT batched across docs:
-                # a measured segmented-reduceat variant (one giant
-                # concatenated product + np.minimum.reduceat) ran 6×
-                # SLOWER — the ~150×32 per-doc temporaries stay in L2
-                # while the batch-wide ones thrash cache (r7)
-                sigs[i] = ((hs[:, None] * a_arr + b_arr) % p).min(axis=0)
-            out = pd.DataFrame({"doc_id": pdf["doc_id"]})
-            for k in range(N_HASHES):
-                out[f"h{k}"] = sigs[:, k]
-            yield out
+    def minhash(doc_id, text):
+        hs = _md5_60(_shingle_set(text)) % p
+        # per-doc (n_shingles × 32) op, NOT batched across docs: a
+        # measured segmented-reduceat variant (one giant concatenated
+        # product + np.minimum.reduceat) ran 6× SLOWER — the ~150×32
+        # per-doc temporaries stay in L2 while the batch-wide ones
+        # thrash cache (r7)
+        yield doc_id, *((hs[:, None] * a_arr + b_arr) % p).min(axis=0).tolist()
 
     id_type = d.schema["doc_id"].dataType.simpleString()
-    return d.select("doc_id", "text").mapInPandas(
-        batches, schema=f"doc_id {id_type}, {_SIG_FIELDS}"
-    )
+    return map_rows(d.select("doc_id", "text"), minhash,
+                    f"doc_id {id_type}, {_SIG_FIELDS}")
+
+
+def _shingles_row(doc_id, text):
+    yield doc_id, sorted(_shingle_set(text))
 
 
 def _shingle_sets_pandas(d: DataFrame) -> DataFrame:
     """(doc_id, text, …) → (doc_id, sh array<string>): the distinct-3-gram
-    shingle sets on the same Arrow-batched Python path (re.ASCII ``\\s+``
-    tokenization identical to :func:`minhash_signatures_pandas` and the
+    shingle sets on the same Arrow-batched Python path (tokenization
+    identical to :func:`minhash_signatures_pandas` and the
     ``_SHINGLE_CTE`` oracle fragment). Used by the candidate-verify stage
     of :func:`minhash_lsh_pairs` — bounded by candidate count."""
-
-    def batches(pdfs):
-        import re
-
-        import pandas as pd
-
-        ws = re.compile(r"\s+", re.ASCII)
-        for pdf in pdfs:
-            shs = []
-            for text in pdf["text"].tolist():
-                toks = [t for t in ws.split(text.lower()) if t]
-                end = max(len(toks) - 3, 0) + 1
-                shs.append(
-                    sorted({" ".join(toks[j : j + 3]) for j in range(end)}))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sh": shs})
-
-    import pandas as pd  # noqa: F401  (worker import exercised above)
-
     id_type = d.schema["doc_id"].dataType.simpleString()
-    return d.select("doc_id", "text").mapInPandas(
-        batches, schema=f"doc_id {id_type}, sh array<string>"
-    )
+    return map_rows(d.select("doc_id", "text"), _shingles_row,
+                    f"doc_id {id_type}, sh array<string>")
 
 
 # shared SQL fragments: tokenize → 3-gram shingles → h32 list (DuckDB's
@@ -372,33 +359,22 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumnRenamed("sh", "sh_b"), "doc_b")
     )
 
-    def jac_batches(pdfs):
-        import math
-
-        import pandas as pd
-
-        for pdf in pdfs:
-            vals = []
-            for sa, sb in zip(pdf["sh_a"], pdf["sh_b"]):
-                s1, s2 = set(sa), set(sb)
-                un = len(s1 | s2)
-                # DuckDB ROUND(double, 4) semantics (half away from zero
-                # on the scaled double); Spark's round() HALF_UPs the
-                # shortest-decimal rendering instead — floor(x·1e4 + 0.5)
-                # matches the oracle on ties and non-ties alike
-                vals.append(
-                    math.floor(len(s1 & s2) / un * 10000.0 + 0.5) / 10000.0
-                    if un else 0.0
-                )
-            yield pd.DataFrame({"doc_a": pdf["doc_a"],
-                                "doc_b": pdf["doc_b"],
-                                "jaccard": vals})
-
     id_type = paired.schema["doc_a"].dataType.simpleString()
-    return paired.mapInPandas(
-        jac_batches,
-        schema=f"doc_a {id_type}, doc_b {id_type}, jaccard double",
-    )
+    return map_rows(paired.select("doc_a", "doc_b", "sh_a", "sh_b"),
+                    _jaccard_row,
+                    f"doc_a {id_type}, doc_b {id_type}, jaccard double")
+
+
+def _jaccard_row(doc_a, doc_b, sh_a, sh_b):
+    s1, s2 = set(sh_a), set(sh_b)
+    un = len(s1 | s2)
+    # DuckDB ROUND(double, 4) semantics (half away from zero on the scaled
+    # double); Spark's round() HALF_UPs the shortest-decimal rendering
+    # instead — floor(x·1e4 + 0.5) matches the oracle on ties and
+    # non-ties alike
+    yield (doc_a, doc_b,
+           math.floor(len(s1 & s2) / un * 10000.0 + 0.5) / 10000.0
+           if un else 0.0)
 
 
 def lsh_armor_stats(bt: DataFrame) -> dict:
@@ -544,7 +520,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def simhash_fingerprints_pandas(d: DataFrame) -> DataFrame:
-    """(doc_id, text, …) → (doc_id, simhash) via mapInPandas. Per doc:
+    """(doc_id, text, …) → (doc_id, simhash) via map_rows. Per doc:
     ASCII-``\\s+`` tokens of lower(text) → base60 md5 hash per token →
     per-bit ±1 votes (numpy (n_tokens × 60) popcount) → majority bits.
     Matches SIMHASH_SQL exactly: vote > 0 sets the bit (ties → 0), empty
@@ -554,33 +530,17 @@ def simhash_fingerprints_pandas(d: DataFrame) -> DataFrame:
     shifts = np.arange(SIM_BITS, dtype=np.int64)
     powers = (np.int64(1) << shifts)
 
-    def batches(pdfs):
-        import hashlib
-        import re
+    def simhash(doc_id, text):
+        toks = _tokens(text)
+        if not toks:
+            yield doc_id, 0
+            return
+        ones = ((_md5_60(toks)[:, None] >> shifts) & 1).sum(axis=0)
+        votes = 2 * ones - len(toks)
+        yield doc_id, int(powers[votes > 0].sum())
 
-        import pandas as pd
-
-        ws = re.compile(r"\s+", re.ASCII)
-        for pdf in pdfs:
-            out = np.zeros(len(pdf), dtype=np.int64)
-            for i, text in enumerate(pdf["text"].tolist()):
-                toks = [t for t in ws.split(text.lower()) if t]
-                if not toks:
-                    continue
-                hs = np.fromiter(
-                    (int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                     for t in toks),
-                    dtype=np.int64,
-                    count=len(toks),
-                )
-                ones = ((hs[:, None] >> shifts) & 1).sum(axis=0)
-                votes = 2 * ones - len(toks)
-                out[i] = int(powers[votes > 0].sum())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
-
-    return d.select("doc_id", "text").mapInPandas(
-        batches, schema="doc_id long, simhash long"
-    )
+    return map_rows(d.select("doc_id", "text"), simhash,
+                    "doc_id long, simhash long")
 
 
 _SIMHASH_CTE = (

@@ -17,7 +17,7 @@ chunking (the render plan is seeded per doc_id), so the pair is a true
 re-formatted duplicate — same content, different layout — exactly what
 normalized dedup and MinHash LSH exist to catch.
 
-Scale shape (100 TB): render and extraction are map-only mapInPandas
+Scale shape (100 TB): render and extraction are map-only ``map_rows``
 stages (no payload shuffle); the reassembled-text frame is persisted once
 and feeds both the dedup-hash and signature paths; LSH banding reuses the
 count-gated bounded-bucket pattern from :mod:`dedup` (no self-join, no
@@ -25,6 +25,9 @@ mega-bucket task).
 """
 
 from __future__ import annotations
+
+import re
+import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -40,6 +43,7 @@ from .dedup import (
 )
 
 CLONE_OFFSET = 1_000_000
+_WS = re.compile(r"\s+")
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,104 +56,82 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(clones)
 
 
+def _rex_text(doc_id: str, text: str | None) -> tuple[str, str | None]:
+    """Render ``text`` into a PDF, span-extract it and reassemble its text
+    spans: (whitespace-collapsed text, extraction error)."""
+    from ..fixtures.gen import make_text_doc
+    from ..pdf.extract import extract_spans
+
+    _golden, pdf = make_text_doc(doc_id, text or "")
+    res = extract_spans(pdf)
+    joined = " ".join(s["text"] for s in res.spans if s["kind"] == "text")
+    return _WS.sub(" ", joined).strip(), res.error
+
+
+def _render_extract(doc_id, text):
+    yield int(doc_id[4:]), _rex_text(doc_id, text)[0]
+
+
 def render_extract_reassemble(named: DataFrame) -> DataFrame:
     """(doc_id 'doc_NNNNNNNN', text) → (doc_id bigint, text) where the
     output text made a full render→span-extraction→reassembly trip
-    through the PDF engine. FUSED into ONE mapInPandas worker: as two
+    through the PDF engine. FUSED into ONE per-row function: as two
     chained MapInPandas nodes every rendered PDF (and its span structs)
     would cross Python→JVM→Python through Arrow once for nothing — the
     render here is only the synthetic source; a real corpus enters at the
     extraction stage, which stays the standalone pipeline.run_extraction.
-    Map-only (no payload shuffle) and streaming-capable (mapInPandas binds
+    Map-only (no payload shuffle) and streaming-capable (map_rows binds
     to micro-batches unchanged — see the streaming integrated-path test)."""
-
-    def render_extract(batches):
-        import re
-
-        import pandas as pd
-
-        from ..fixtures.gen import make_text_doc
-        from ..pdf.extract import extract_spans
-
-        ws = re.compile(r"\s+")
-        for b in batches:
-            ids, texts = [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                _golden, pdf = make_text_doc(doc_id, text or "")
-                res = extract_spans(pdf)
-                joined = " ".join(
-                    s["text"] for s in res.spans if s["kind"] == "text")
-                ids.append(int(doc_id[4:]))
-                texts.append(ws.sub(" ", joined).strip())
-            yield pd.DataFrame({"doc_id": ids, "text": texts})
-
-    return named.mapInPandas(
-        render_extract, schema="doc_id bigint, text string")
+    return pipeline.map_rows(named.select("doc_id", "text"), _render_extract,
+                             "doc_id bigint, text string")
 
 
 PART_CHARS = 65536  # oversized-doc task atom: ~0.6 s render+extract each
 PARTS_DDL = "doc_id string, part_idx int, text string"
 REX_DDL = ("doc_id bigint, part_idx int, text string, multi boolean, "
-           "partition_id int, elapsed_ms bigint, error string")
+           "partition_id int, elapsed_ms double, error string")
 
 
-def _rex_worker(batches):
-    """Fused render→extract→reassemble worker over (doc_id, text[,
-    part_idx]) rows — shared by the batch and streaming scale paths."""
-    import re
-    import time
-
-    import pandas as pd
-    from pyspark import TaskContext
-
-    from ..fixtures.gen import make_text_doc
-    from ..pdf.extract import extract_spans
-
-    pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    ws = re.compile(r"\s+")
-    for b in batches:
-        rows = []
-        has_part = "part_idx" in b.columns
-        parts = b["part_idx"] if has_part else [0] * len(b)
-        for doc_id, text, part in zip(b["doc_id"], b["text"], parts):
-            t0 = time.perf_counter()
-            _golden, pdf = make_text_doc(doc_id, text or "")
-            res = extract_spans(pdf)
-            joined = " ".join(
-                s["text"] for s in res.spans if s["kind"] == "text")
-            rows.append((
-                int(doc_id[4:]), int(part),
-                ws.sub(" ", joined).strip(), has_part, pid,
-                int((time.perf_counter() - t0) * 1000), res.error,
-            ))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "part_idx", "text", "multi", "partition_id",
-            "elapsed_ms", "error"])
+def _rex_part(doc_id, part_idx, text, multi=True):
+    """One REX_DDL row: render→extract→reassemble of one part (or, with
+    ``multi=False``, of a whole small doc) plus its lineage columns."""
+    t0 = time.perf_counter()
+    out, err = _rex_text(doc_id, text)
+    pid, ms = pipeline.lineage(t0)
+    yield int(doc_id[4:]), int(part_idx), out, multi, pid, ms, err
 
 
-def _make_splitter(part_chars: int):
-    """Word-boundary splitter worker: (doc_id, text) → bounded parts."""
+def _rex_whole(doc_id, text):
+    return _rex_part(doc_id, 0, text, multi=False)
 
-    def split_batches(batches):
-        import pandas as pd
 
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                cur: list[str] = []
-                n = 0
-                idx = 0
-                for w in (text or "").split():
-                    if n + len(w) + 1 > part_chars and cur:
-                        rows.append((doc_id, idx, " ".join(cur)))
-                        idx += 1
-                        cur, n = [], 0
-                    cur.append(w)
-                    n += len(w) + 1
-                rows.append((doc_id, idx, " ".join(cur)))
-            yield pd.DataFrame(rows, columns=["doc_id", "part_idx", "text"])
+def _splitter(part_chars: int):
+    """Word-boundary splitter: (doc_id, text) → bounded PARTS_DDL rows."""
 
-    return split_batches
+    def split_text(doc_id, text):
+        cur: list[str] = []
+        n = idx = 0
+        for w in (text or "").split():
+            if n + len(w) + 1 > part_chars and cur:
+                yield doc_id, idx, " ".join(cur)
+                idx += 1
+                cur, n = [], 0
+            cur.append(w)
+            n += len(w) + 1
+        yield doc_id, idx, " ".join(cur)
+
+    return split_text
+
+
+def _split_oversized(named: DataFrame, part_chars: int
+                    ) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, text) → (docs of at most ``part_chars`` chars, PARTS_DDL
+    parts of the longer ones) — the split shared by the batch and
+    streaming scale paths, which each spread the parts their own way."""
+    length = F.length(F.coalesce("text", F.lit("")))
+    small = named.filter(length <= part_chars).select("doc_id", "text")
+    big = named.filter(length > part_chars).select("doc_id", "text")
+    return small, pipeline.map_rows(big, _splitter(part_chars), PARTS_DDL)
 
 
 def render_extract_parts(named: DataFrame, part_chars: int = PART_CHARS
@@ -164,21 +146,17 @@ def render_extract_parts(named: DataFrame, part_chars: int = PART_CHARS
     only the oversized slice pays a parts shuffle.
 
     Returns one row per part: (doc_id bigint, part_idx int, text,
-    multi boolean, partition_id int, elapsed_ms bigint, error string) —
+    multi boolean, partition_id int, elapsed_ms double, error string) —
     the lineage columns feed per-partition straggler metrics (north-rule
     per-partition lineage, same convention as pipeline.run_extraction)."""
-    small = named.filter(
-        F.length(F.coalesce("text", F.lit(""))) <= part_chars)
-    big = named.filter(F.length(F.coalesce("text", F.lit(""))) > part_chars)
-    parts = big.mapInPandas(
-        _make_splitter(part_chars), PARTS_DDL
-    ).repartitionByRange(F.col("doc_id"), F.col("part_idx"))
+    small, parts = _split_oversized(named, part_chars)
     # range- (not hash-) partitioned: the part count is small, and hash
     # buckets birthday-collide (2-3 atoms in one task defeats the split);
     # ranges give ~one atom per partition
+    parts = parts.repartitionByRange(F.col("doc_id"), F.col("part_idx"))
     return (
-        small.select("doc_id", "text").mapInPandas(_rex_worker, REX_DDL)
-        .unionByName(parts.mapInPandas(_rex_worker, REX_DDL))
+        pipeline.map_rows(small, _rex_whole, REX_DDL)
+        .unionByName(pipeline.map_rows(parts, _rex_part, REX_DDL))
     )
 
 

@@ -18,15 +18,21 @@ length+density gate would drop the dialogue lines and keep the
 cookie/author prose (the r6 fixture-side tail-merge compensation is
 deleted).
 
-Scale shape: one map-only mapInPandas stage (wrap + parse + classify in
-a single worker, no shuffle); the output is per-doc scalars.
+Scale shape: one map-only ``map_rows`` stage (wrap + parse + classify in
+one per-row function, no shuffle); the output is per-doc scalars.
 """
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..pipeline import map_rows
 from . import phash
+
+_WS = re.compile(r"\s+")
 
 
 def html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,49 +46,32 @@ def html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ).alias("doc_id"),
         "text",
     )
+    return map_rows(docs, _main_content_row,
+                    "doc_id bigint, main_hash string, main_chars bigint, "
+                    "n_tokens bigint")
 
-    def batches(pdfs):
-        import hashlib
-        import re
 
-        import pandas as pd
+def _main_content_row(doc_id, text):
+    from ..fixtures.foreign_html import foreign_html, tag_soup
+    from ..fixtures.gen import make_html_doc
+    from ..html_extract import main_content
 
-        from ..fixtures.foreign_html import foreign_html, tag_soup
-        from ..fixtures.gen import make_html_doc
-        from ..html_extract import main_content
-
-        ws = re.compile(r"\s+")
-        for b in pdfs:
-            ids, hashes, chars, toks = [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                html = make_html_doc(doc_id, text or "")
-                if int(doc_id[4:]) % 3 == 1:
-                    # every third page re-serialized through foreign markup
-                    # conventions (entity-encoded text, quoting/case/comment
-                    # permutations) — the oracle is unchanged, so the value
-                    # hash proves extraction is markup-convention invariant
-                    html = foreign_html(html, doc_id)
-                elif int(doc_id[4:]) % 3 == 2:
-                    # …and another third broken into TAG SOUP (unclosed
-                    # <p>/<li>, stray closes, misnested inline, bare &,
-                    # attribute junk; r9 VERDICT #2) — html.parser's
-                    # recovery is the defined semantics, oracle unchanged
-                    html = tag_soup(html, doc_id)
-                main = ws.sub(" ", main_content(html)).strip()
-                ids.append(int(doc_id[4:]))
-                hashes.append(hashlib.md5(main.encode()).hexdigest())
-                chars.append(len(main))
-                toks.append(len([t for t in main.split(" ") if t]))
-            yield pd.DataFrame({
-                "doc_id": ids, "main_hash": hashes,
-                "main_chars": chars, "n_tokens": toks,
-            })
-
-    return docs.mapInPandas(
-        batches,
-        schema="doc_id bigint, main_hash string, main_chars bigint, "
-               "n_tokens bigint",
-    )
+    html = make_html_doc(doc_id, text or "")
+    if int(doc_id[4:]) % 3 == 1:
+        # every third page re-serialized through foreign markup
+        # conventions (entity-encoded text, quoting/case/comment
+        # permutations) — the oracle is unchanged, so the value hash
+        # proves extraction is markup-convention invariant
+        html = foreign_html(html, doc_id)
+    elif int(doc_id[4:]) % 3 == 2:
+        # …and another third broken into TAG SOUP (unclosed <p>/<li>,
+        # stray closes, misnested inline, bare &, attribute junk; r9
+        # VERDICT #2) — html.parser's recovery is the defined semantics,
+        # oracle unchanged
+        html = tag_soup(html, doc_id)
+    main = _WS.sub(" ", main_content(html)).strip()
+    yield (int(doc_id[4:]), hashlib.md5(main.encode()).hexdigest(),
+           len(main), len([t for t in main.split(" ") if t]))
 
 
 # expected values straight from the ORIGINAL text: the wrap+strip trip

@@ -1,8 +1,8 @@
 """Multimodal column operators: image/audio/video as opaque `binary` columns
 with typed metadata.
 
-The Spark-side plumbing (schemas, Arrow batch shapes, mapInPandas
-signatures, partitioning) AND the pixel decode are real for the codec
+The Spark-side plumbing (schemas, per-row ``map_rows`` functions,
+partitioning) AND the pixel decode are real for the codec
 families the engine implements (CCITT fax, JBIG2, baseline JPEG —
 internal/ccittfax + internal/jbig2 + Go image/jpeg parity):
 `extract_features` computes 64-dim block-mean vectors + 64-bit dHashes
@@ -15,10 +15,10 @@ plumbing stub (byte-fold, documented)."""
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..pipeline import gen_docs_pdf, map_rows
 
 MEDIA_SCHEMA = (
     "media_ref string, doc_id string, kind string, payload binary, "
@@ -38,52 +38,41 @@ THUMB_SCHEMA = (
 def media_table_from_fixtures(spark, n_docs: int = 60, mix="default") -> DataFrame:
     """Build a media table (one row per media span payload) from the fixture
     corpus — exercises the binary-column path end to end."""
-    from .. import pipeline
+    docs = gen_docs_pdf(spark, n_docs, mix=mix, partitions=4)
+    return map_rows(docs.select("doc_id", "pdf_bytes"), _emit_media,
+                    MEDIA_SCHEMA)
 
-    docs = pipeline.gen_docs_pdf(spark, n_docs, mix=mix, partitions=4)
 
-    def emit_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..pdf.cos import PdfDocument, Stream
+def _emit_media(doc_id, pdf):
+    """One PDF → one MEDIA_SCHEMA row per image XObject stream."""
+    from ..pdf.cos import PdfDocument, Stream
 
-        for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf_bytes"]):
-                try:
-                    doc = PdfDocument(bytes(pdf))
-                except Exception:
-                    continue
-                for num in sorted(doc.xref):
-                    try:
-                        obj = doc.get_object(num)
-                    except Exception:
-                        continue
-                    if not isinstance(obj, Stream):
-                        continue
-                    d = obj.dict
-                    if d.get("Subtype") != "Image":
-                        continue
-                    ref = "img_" + hashlib.sha256(obj.raw).hexdigest()[:16]
-                    w = int(doc.resolve(d.get("Width")) or 0)
-                    h = int(doc.resolve(d.get("Height")) or 0)
-                    filt = doc.resolve(d.get("Filter"))
-                    codec = str(filt if not isinstance(filt, list)
-                                else (filt[0] if filt else ""))
-                    parms = doc.resolve(d.get("DecodeParms")) or {}
-                    if not isinstance(parms, dict):
-                        parms = {}
-                    k = int(doc.resolve(parms.get("K", 0)) or 0)
-                    b1 = bool(doc.resolve(parms.get("BlackIs1", False)))
-                    rows.append(
-                        (ref, doc_id, "image", obj.raw, w, h, len(obj.raw),
-                         codec, k, b1)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "doc_id", "kind", "payload", "width",
-                         "height", "n_bytes", "codec", "ccitt_k", "blackis1"],
-            )
-
-    return docs.mapInPandas(emit_media, schema=MEDIA_SCHEMA)
+    try:
+        doc = PdfDocument(bytes(pdf))
+    except Exception:
+        return
+    for num in sorted(doc.xref):
+        try:
+            obj = doc.get_object(num)
+        except Exception:
+            continue
+        if not isinstance(obj, Stream):
+            continue
+        d = obj.dict
+        if d.get("Subtype") != "Image":
+            continue
+        ref = "img_" + hashlib.sha256(obj.raw).hexdigest()[:16]
+        w = int(doc.resolve(d.get("Width")) or 0)
+        h = int(doc.resolve(d.get("Height")) or 0)
+        filt = doc.resolve(d.get("Filter"))
+        codec = str(filt if not isinstance(filt, list)
+                    else (filt[0] if filt else ""))
+        parms = doc.resolve(d.get("DecodeParms")) or {}
+        if not isinstance(parms, dict):
+            parms = {}
+        k = int(doc.resolve(parms.get("K", 0)) or 0)
+        b1 = bool(doc.resolve(parms.get("BlackIs1", False)))
+        yield ref, doc_id, "image", obj.raw, w, h, len(obj.raw), codec, k, b1
 
 
 def _decode_pixels(payload: bytes, width: int, height: int, codec: str,
@@ -177,66 +166,38 @@ def extract_features(media: DataFrame) -> DataFrame:
     Codecs without a decoder and per-row failures land in
     `decode_ok=false` rows, never fail the task (relaxed philosophy,
     SURVEY §3.1)."""
+    return map_rows(
+        media.select("media_ref", "doc_id", "payload", "width", "height",
+                     "codec", "ccitt_k", "blackis1"),
+        _feature_row, FEATURE_SCHEMA)
 
-    def feat_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            refs, dids, feats, dims, hashes, oks = [], [], [], [], [], []
-            for ref, did, payload, w, h, codec, k, b1 in zip(
-                b["media_ref"], b["doc_id"], b["payload"], b["width"],
-                b["height"], b["codec"], b["ccitt_k"], b["blackis1"],
-            ):
-                refs.append(ref)
-                dids.append(did)
-                try:
-                    f, dh = _image_features(
-                        bytes(payload or b""), int(w), int(h), str(codec),
-                        int(k), bool(b1))
-                    feats.append(f)
-                    dims.append(len(f))
-                    hashes.append(dh)
-                    oks.append(True)
-                except Exception:
-                    feats.append([])
-                    dims.append(0)
-                    hashes.append(0)
-                    oks.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "doc_id": dids,
-                    "feature": feats,
-                    "feat_dim": dims,
-                    "dhash": hashes,
-                    "decode_ok": oks,
-                }
-            )
 
-    return media.mapInPandas(feat_batch, schema=FEATURE_SCHEMA)
+def _feature_row(ref, did, payload, w, h, codec, k, b1):
+    try:
+        f, dh = _image_features(bytes(payload or b""), int(w), int(h),
+                                str(codec), int(k), bool(b1))
+    except Exception:
+        yield ref, did, [], 0, 0, False
+        return
+    yield ref, did, f, len(f), dh, True
 
 
 def resize_thumbnails(media: DataFrame, max_side: int = 4) -> DataFrame:
     """Thumbnail 'resize' plumbing: batch shape + output schema are real;
     the pixel work is a deterministic byte-fold stub."""
 
-    def thumb_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for ref, payload, w, h in zip(
-                b["media_ref"], b["payload"], b["width"], b["height"]
-            ):
-                p = bytes(payload or b"")
-                tw = min(int(w) or max_side, max_side)
-                th_ = min(int(h) or max_side, max_side)
-                n = max(1, tw * th_ * 3)
-                folded = bytes(
-                    sum(p[i::n]) % 256 if p else 0 for i in range(min(n, len(p) or 1))
-                )
-                rows.append((ref, folded, tw, th_))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "thumb", "thumb_w", "thumb_h"]
-            )
+    def thumbnail(ref, payload, w, h):
+        p = bytes(payload or b"")
+        tw = min(int(w) or max_side, max_side)
+        th_ = min(int(h) or max_side, max_side)
+        n = max(1, tw * th_ * 3)
+        folded = bytes(
+            sum(p[i::n]) % 256 if p else 0 for i in range(min(n, len(p) or 1))
+        )
+        yield ref, folded, tw, th_
 
-    return media.mapInPandas(thumb_batch, schema=THUMB_SCHEMA)
+    return map_rows(media.select("media_ref", "payload", "width", "height"),
+                    thumbnail, THUMB_SCHEMA)
 
 
 MEDIA_BLOCK_CAP = 64
@@ -314,56 +275,44 @@ def bilevel_features(media: DataFrame) -> DataFrame:
     media — the scanned-document leg of the multimodal path (reference
     internal/ccittfax + internal/jbig2). Computes the ink ratio (fraction of
     black pixels) per image via the engine's decoders inside an
-    Arrow-batched mapInPandas; other codecs keep the stub path
+    Arrow-batched map_rows stage; other codecs keep the stub path
     (extract_features)."""
-
-    def fax_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..pdf.ccitt import decode_ccitt
-        from ..pdf.jbig2 import decode_jbig2_packed
-
-        for b in batches:
-            rows = []
-            for ref, doc_id, payload, w, h, k, b1, codec in zip(
-                b["media_ref"], b["doc_id"], b["payload"], b["width"],
-                b["height"], b["ccitt_k"], b["blackis1"], b["codec"],
-            ):
-                try:
-                    if codec == "JBIG2Decode":
-                        # JBIG2 convention: 1 = black, always
-                        bits, bw, bh = decode_jbig2_packed(
-                            bytes(payload), int(w), int(h))
-                        black_is_one, width = True, bw
-                    else:
-                        black_is_one = bool(b1)
-                        width = int(w)
-                        bits = decode_ccitt(
-                            bytes(payload),
-                            {"K": int(k), "Columns": width,
-                             "BlackIs1": black_is_one},
-                        )
-                    stride = (width + 7) // 8
-                    n_black = total = 0
-                    for r in range(len(bits) // stride):
-                        for x in range(width):
-                            bit = (bits[r * stride + (x >> 3)]
-                                   >> (7 - (x & 7))) & 1
-                            # PDF CCITT default: 0 = black; /BlackIs1 (and
-                            # JBIG2 foreground) invert
-                            n_black += bit if black_is_one else (1 - bit)
-                            total += 1
-                    rows.append((ref, doc_id, int(w), int(h),
-                                 round(n_black / max(total, 1), 6), True))
-                except Exception:  # noqa: BLE001 — per-row error path
-                    rows.append((ref, doc_id, int(w), int(h), 0.0, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "doc_id", "width", "height",
-                         "ink_ratio", "decode_ok"],
-            )
-
-    return media.filter(
+    bilevel = media.filter(
         F.col("codec").isin("CCITTFaxDecode", "JBIG2Decode")
-    ).mapInPandas(fax_batch, schema=BILEVEL_SCHEMA)
+    ).select("media_ref", "doc_id", "payload", "width", "height", "ccitt_k",
+             "blackis1", "codec")
+    return map_rows(bilevel, _ink_ratio_row, BILEVEL_SCHEMA)
+
+
+def _ink_ratio_row(ref, doc_id, payload, w, h, k, b1, codec):
+    from ..pdf.ccitt import decode_ccitt
+    from ..pdf.jbig2 import decode_jbig2_packed
+
+    try:
+        if codec == "JBIG2Decode":
+            # JBIG2 convention: 1 = black, always
+            bits, bw, bh = decode_jbig2_packed(bytes(payload), int(w), int(h))
+            black_is_one, width = True, bw
+        else:
+            black_is_one = bool(b1)
+            width = int(w)
+            bits = decode_ccitt(
+                bytes(payload),
+                {"K": int(k), "Columns": width, "BlackIs1": black_is_one},
+            )
+        stride = (width + 7) // 8
+        n_black = total = 0
+        for r in range(len(bits) // stride):
+            for x in range(width):
+                bit = (bits[r * stride + (x >> 3)] >> (7 - (x & 7))) & 1
+                # PDF CCITT default: 0 = black; /BlackIs1 (and JBIG2
+                # foreground) invert
+                n_black += bit if black_is_one else (1 - bit)
+                total += 1
+    except Exception:  # noqa: BLE001 — per-row error path
+        yield ref, doc_id, int(w), int(h), 0.0, False
+        return
+    yield ref, doc_id, int(w), int(h), round(n_black / max(total, 1), 6), True
 
 
 GRAY_SCHEMA = (
@@ -375,35 +324,22 @@ GRAY_SCHEMA = (
 def grayscale_features(media: DataFrame) -> DataFrame:
     """REAL pixel decode for baseline-JPEG (DCTDecode) media — grayscale
     statistics per image via the engine's T.81 decoder (pdf/jpeg.py) inside
-    an Arrow-batched mapInPandas. Non-baseline/color streams land in
+    an Arrow-batched map_rows stage. Non-baseline/color streams land in
     decode_ok=false rows (relaxed philosophy)."""
+    gray = media.filter(F.col("codec") == "DCTDecode").select(
+        "media_ref", "doc_id", "payload", "width", "height")
+    return map_rows(gray, _gray_stats_row, GRAY_SCHEMA)
 
-    def jpg_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        from ..pdf.jpeg import decode_baseline_gray
+def _gray_stats_row(ref, doc_id, payload, w, h):
+    import numpy as np
 
-        for b in batches:
-            rows = []
-            for ref, doc_id, payload, w, h in zip(
-                b["media_ref"], b["doc_id"], b["payload"], b["width"],
-                b["height"],
-            ):
-                try:
-                    img = decode_baseline_gray(bytes(payload))
-                    rows.append(
-                        (ref, doc_id, int(w), int(h),
-                         round(float(np.mean(img)), 4),
-                         round(float(np.std(img)), 4), True)
-                    )
-                except Exception:  # noqa: BLE001 — per-row error path
-                    rows.append((ref, doc_id, int(w), int(h), 0.0, 0.0, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "doc_id", "width", "height",
-                         "mean_gray", "std_gray", "decode_ok"],
-            )
+    from ..pdf.jpeg import decode_baseline_gray
 
-    return media.filter(F.col("codec") == "DCTDecode").mapInPandas(
-        jpg_batch, schema=GRAY_SCHEMA
-    )
+    try:
+        img = decode_baseline_gray(bytes(payload))
+    except Exception:  # noqa: BLE001 — per-row error path
+        yield ref, doc_id, int(w), int(h), 0.0, 0.0, False
+        return
+    yield (ref, doc_id, int(w), int(h), round(float(np.mean(img)), 4),
+           round(float(np.std(img)), 4), True)

@@ -2,13 +2,16 @@
 
 Design (SURVEY §3.1 "Spark lifecycle equivalent"):
 
-    scan → size-aware salted repartition → mapInPandas(extract_batch)
+    scan → size-aware salted repartition → map_rows(extract_doc)
          → spans_out (+ per-partition lineage/metrics) → sink / verification
 
 All tokenize/classify work happens inside Arrow-batched Python workers — never
-per-row Python in the driver plan. The only cross-document relational ops are
-the explicit salted repartition, the verification join, and checkpoint
-bookkeeping (manifest anti-join), exactly the set called out in SURVEY §2.5.
+per-row Python in the driver plan. Every such worker in the package is a
+plain per-row function run by :func:`map_rows`, which owns the one Arrow
+batch loop (the package's only ``mapInPandas`` call). The only
+cross-document relational ops are the explicit salted repartition, the
+verification join, and checkpoint bookkeeping (manifest anti-join),
+exactly the set called out in SURVEY §2.5.
 
 Skew: document size is heavy-tailed (one 5,000-page PDF ≫ median). The
 opt-in salted repartition spreads docs with a full-cardinality
@@ -24,7 +27,9 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DataType
 
 from . import schema
 
@@ -62,50 +67,70 @@ def get_spark(app: str = "unipdf-spark", cores: int | None = None,
     return b.getOrCreate()
 
 
+# --- the Arrow-batched Python stage ------------------------------------------
+
+
+def map_rows(df: DataFrame, fn, ddl: str) -> DataFrame:
+    """The package's one Arrow-batched Python stage: ``fn(*row)`` runs on
+    every input row (columns in ``df`` order) and returns zero or more
+    output tuples in ``ddl`` column order; each Arrow batch becomes one
+    pandas frame. The batch function carries ``fn``'s name, so each
+    ``MapInPandas`` node of a plan still says what runs there."""
+    cols = DataType.fromDDL(ddl).fieldNames()
+
+    def batches(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in frames:
+            yield pd.DataFrame(
+                [out for row in b.itertuples(index=False, name=None)
+                 for out in fn(*row)],
+                columns=cols,
+            )
+
+    batches.__name__ = fn.__name__
+    return df.mapInPandas(batches, schema=ddl)
+
+
+def lineage(t0: float) -> tuple[int, float]:
+    """Per-row lineage columns: (partition_id, elapsed_ms since ``t0``)."""
+    tc = TaskContext.get()
+    return (tc.partitionId() if tc else -1,
+            (time.perf_counter() - t0) * 1000.0)
+
+
+def span_tuples(spans) -> list[tuple]:
+    """Span dicts → rows of the ``schema.SPANS_DDL`` struct array."""
+    return [(s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in spans]
+
+
 # --- distributed fixture generation ------------------------------------------
+
+
+def _golden_row(doc_id: str, cls: str, golden, pdf_bytes: bytes) -> tuple:
+    """One ``schema.DOCS_PDF_GOLDEN_DDL`` row."""
+    return doc_id, pdf_bytes, len(golden), cls, span_tuples(golden)
 
 
 def gen_docs_pdf(spark: SparkSession, n_docs: int, seed: int = 42,
                  mix="default", partitions: int | None = None) -> DataFrame:
-    """Distributed fixture corpus: spark.range → mapInPandas(render).
+    """Distributed fixture corpus: spark.range → map_rows(render_fixture).
     Generation is a pure function of (seed, doc_id) so any executor can
     (re)produce any doc — no driver-side rendering, no broadcast payloads."""
     parts = partitions or spark.sparkContext.defaultParallelism
 
-    def render_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def render_fixture(i):
         from .fixtures import gen
 
         if isinstance(mix, list):  # explicit [(class, weight), ...]
             use_mix = mix
         else:
             use_mix = gen.BENCH_MIX if mix == "bench" else gen.DEFAULT_MIX
-        for pdf_batch in batches:
-            rows = []
-            for i in pdf_batch["id"]:
-                i = int(i)
-                doc_id = f"doc_{i:08d}"
-                cls = gen._class_for(i, use_mix)
-                golden, pdf_bytes = gen.make_doc(doc_id, cls, seed)
-                rows.append(
-                    (doc_id, pdf_bytes, len(golden), cls,
-                     [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                      for s in golden])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pdf_bytes", "n_spans", "fixture_class",
-                         "golden_spans"],
-            )
+        doc_id = f"doc_{i:08d}"
+        cls = gen._class_for(i, use_mix)
+        yield _golden_row(doc_id, cls, *gen.make_doc(doc_id, cls, seed))
 
-    out_schema = (
-        schema.DOCS_PDF_DDL
-        + ", golden_spans array<struct<kind:string,text:string,"
-          "media_ref:string,offset:int>>"
-    )
-    return (
-        spark.range(0, n_docs, numPartitions=parts)
-        .mapInPandas(render_batch, schema=out_schema)
-    )
+    return map_rows(spark.range(0, n_docs, numPartitions=parts),
+                    render_fixture, schema.DOCS_PDF_GOLDEN_DDL)
 
 
 def docs_pdf_from_documents(spark: SparkSession, sf_dir: str,
@@ -121,30 +146,13 @@ def docs_pdf_from_documents(spark: SparkSession, sf_dir: str,
         "text",
     )
 
-    def render_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .fixtures import gen
+    def render_text(doc_id, text):
+        from .fixtures.gen import make_text_doc
 
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                golden, pdf_bytes = gen.make_text_doc(doc_id, text or "")
-                rows.append(
-                    (doc_id, pdf_bytes, len(golden), "external_text",
-                     [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                      for s in golden])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pdf_bytes", "n_spans", "fixture_class",
-                         "golden_spans"],
-            )
+        yield _golden_row(doc_id, "external_text",
+                          *make_text_doc(doc_id, text or ""))
 
-    out_schema = (
-        schema.DOCS_PDF_DDL
-        + ", golden_spans array<struct<kind:string,text:string,"
-          "media_ref:string,offset:int>>"
-    )
-    return docs.mapInPandas(render_batch, schema=out_schema)
+    return map_rows(docs, render_text, schema.DOCS_PDF_GOLDEN_DDL)
 
 
 def docs_pdf_from_spans_table(docs: DataFrame) -> DataFrame:
@@ -154,35 +162,19 @@ def docs_pdf_from_spans_table(docs: DataFrame) -> DataFrame:
     golden spans (text normalized to the renderable subset; media payloads
     derived from the opaque input refs — see fixtures.gen.make_spans_doc)."""
 
-    def render_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def render_spans(doc_id, spans):
         from .fixtures.gen import make_spans_doc
 
-        for b in batches:
-            rows = []
-            for doc_id, spans in zip(b["doc_id"], b["spans"]):
-                span_dicts = [
-                    {"kind": s["kind"], "text": s["text"],
-                     "media_ref": s["media_ref"], "offset": s["offset"]}
-                    for s in spans
-                ]
-                golden, pdf_bytes = make_spans_doc(doc_id, span_dicts)
-                rows.append(
-                    (doc_id, pdf_bytes, len(golden), "spans_table",
-                     [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                      for s in golden])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pdf_bytes", "n_spans", "fixture_class",
-                         "golden_spans"],
-            )
+        span_dicts = [
+            {"kind": s["kind"], "text": s["text"],
+             "media_ref": s["media_ref"], "offset": s["offset"]}
+            for s in spans
+        ]
+        yield _golden_row(doc_id, "spans_table",
+                          *make_spans_doc(doc_id, span_dicts))
 
-    out_schema = (
-        schema.DOCS_PDF_DDL
-        + ", golden_spans array<struct<kind:string,text:string,"
-          "media_ref:string,offset:int>>"
-    )
-    return docs.mapInPandas(render_batch, schema=out_schema)
+    return map_rows(docs.select("doc_id", "spans"), render_spans,
+                    schema.DOCS_PDF_GOLDEN_DDL)
 
 
 # --- extraction stage -----------------------------------------------------------
@@ -200,37 +192,16 @@ def salted_repartition(df: DataFrame, partitions: int,
     return df.repartition(partitions, F.xxhash64(F.col("doc_id")))
 
 
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: pdf_bytes → spans (+metrics). Pure Python/NumPy
-    inside Arrow batches; no Spark calls (ArrowEvalPython stage)."""
-    from pyspark import TaskContext
-
+def extract_doc(doc_id, pdf_bytes):
+    """pdf_bytes → one ``schema.SPANS_OUT_DDL`` row (spans + metrics). Pure
+    Python/NumPy inside Arrow batches; no Spark calls."""
     from .pdf.extract import extract_spans
 
-    pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    for b in batches:
-        rows = []
-        for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-            t0 = time.perf_counter()
-            res = extract_spans(bytes(pdf_bytes))
-            dt = (time.perf_counter() - t0) * 1000.0
-            rows.append(
-                (
-                    doc_id,
-                    [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                     for s in res.spans],
-                    res.n_chars,
-                    res.n_misses,
-                    pid,
-                    dt,
-                    res.error,
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "spans", "n_chars", "n_misses", "partition_id",
-                     "elapsed_ms", "error"],
-        )
+    t0 = time.perf_counter()
+    res = extract_spans(bytes(pdf_bytes))
+    pid, ms = lineage(t0)
+    yield (doc_id, span_tuples(res.spans), res.n_chars, res.n_misses, pid,
+           ms, res.error)
 
 
 def run_extraction(docs_pdf: DataFrame, partitions: int | None = None,
@@ -254,36 +225,47 @@ def run_extraction(docs_pdf: DataFrame, partitions: int | None = None,
             df = df.coalesce(partitions)
         elif partitions > cur:
             df = df.repartition(partitions)
-    return df.mapInPandas(extract_batch, schema=schema.SPANS_OUT_DDL)
+    return map_rows(df, extract_doc, schema.SPANS_OUT_DDL)
 
 
 TABLE_CELLS_DDL = "doc_id string, table_idx int, row int, col int, cell string"
+LIST_ITEMS_DDL = ("doc_id string, list_idx int, item_idx int, label string, "
+                  "body string")
 
 
-def table_cells_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: pdf_bytes → one row per (table, row, col) cell —
-    the TextTable/TableCell structured API (extractor.go:35/:899) lifted to
-    a relational shape."""
+def table_cells(doc_id, pdf_bytes):
+    """pdf_bytes → one row per (table, row, col) cell — the
+    TextTable/TableCell structured API (extractor.go:35/:899) lifted to a
+    relational shape."""
     from .pdf.extract import extract_tables
 
-    for b in batches:
-        rows = []
-        for doc_id, pdf_bytes in zip(b["doc_id"], b["pdf_bytes"]):
-            for ti, t in enumerate(extract_tables(bytes(pdf_bytes))):
-                for r, rowvals in enumerate(t["cells"]):
-                    for c, cell in enumerate(rowvals):
-                        rows.append((doc_id, ti, r, c, cell))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "table_idx", "row", "col", "cell"]
-        )
+    for ti, t in enumerate(extract_tables(bytes(pdf_bytes))):
+        for r, rowvals in enumerate(t["cells"]):
+            for c, cell in enumerate(rowvals):
+                yield doc_id, ti, r, c, cell
+
+
+def list_items(doc_id, pdf_bytes):
+    """pdf_bytes → one row per (list, item): label + body."""
+    from .pdf.extract import extract_lists
+
+    for li, lst in enumerate(extract_lists(bytes(pdf_bytes))):
+        for ii, item in enumerate(lst["items"]):
+            yield doc_id, li, ii, item["label"], item["body"]
 
 
 def run_table_extraction(docs_pdf: DataFrame) -> DataFrame:
     """Structured table cells for every detected table (map-only, same
     no-payload-shuffle policy as run_extraction)."""
-    return docs_pdf.select("doc_id", "pdf_bytes").mapInPandas(
-        table_cells_batch, schema=TABLE_CELLS_DDL
-    )
+    return map_rows(docs_pdf.select("doc_id", "pdf_bytes"), table_cells,
+                    TABLE_CELLS_DDL)
+
+
+def run_list_extraction(docs_pdf: DataFrame) -> DataFrame:
+    """Structured list items for every detected list (map-only, same
+    no-payload-shuffle policy as run_extraction)."""
+    return map_rows(docs_pdf.select("doc_id", "pdf_bytes"), list_items,
+                    LIST_ITEMS_DDL)
 
 
 def partition_lineage(spans_out: DataFrame) -> DataFrame:

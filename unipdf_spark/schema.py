@@ -37,19 +37,20 @@ import hashlib
 KIND_TEXT = "text"
 KIND_MEDIA = "media"
 
+SPANS_DDL = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+
 SPANS_OUT_DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
+    f"doc_id string, spans {SPANS_DDL}, "
     "n_chars int, n_misses int, partition_id int, elapsed_ms double, "
     "error string"
 )
 
 DOCS_PDF_DDL = "doc_id string, pdf_bytes binary, n_spans int, fixture_class string"
 
-DOCS_DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
+# rendered docs carrying the spans they were rendered from
+DOCS_PDF_GOLDEN_DDL = f"{DOCS_PDF_DDL}, golden_spans {SPANS_DDL}"
+
+DOCS_DDL = f"doc_id string, spans {SPANS_DDL}"
 
 
 def media_ref_for(raw_stream_bytes: bytes) -> str:

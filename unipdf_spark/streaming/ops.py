@@ -13,8 +13,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .. import schema
-
 SESSION_GAP_S = 1800
 
 
@@ -114,14 +112,13 @@ def streaming_sessionize(events: DataFrame) -> DataFrame:
 
 
 def streaming_extract(docs_pdf: DataFrame) -> DataFrame:
-    """Streaming span extraction: the SAME Arrow-batched extract_batch stage
-    bound to a streaming source — micro-batch continuous ingestion of
-    documents (checkpointing comes from the sink's checkpointLocation)."""
-    from ..pipeline import extract_batch
+    """Streaming span extraction: the SAME Arrow-batched
+    pipeline.run_extraction stage bound to a streaming source — micro-batch
+    continuous ingestion of documents (checkpointing comes from the sink's
+    checkpointLocation)."""
+    from ..pipeline import run_extraction
 
-    return docs_pdf.select("doc_id", "pdf_bytes").mapInPandas(
-        extract_batch, schema=schema.SPANS_OUT_DDL
-    )
+    return run_extraction(docs_pdf)
 
 
 DEDUP_OUT_SCHEMA = "text_hash string, doc_id string, is_new boolean"
@@ -248,18 +245,15 @@ def streaming_render_extract_reassemble(docs: DataFrame,
     stateless applyInPandasWithState group step. Small docs take the
     map-only branch; a 1 MB document in a micro-batch no longer holds the
     trigger hostage on one core."""
-    from ..operators.extracted import (PART_CHARS, PARTS_DDL, REX_DDL,
-                                       _make_splitter, _rex_worker)
+    from ..operators.extracted import (PART_CHARS, REX_DDL, _rex_part,
+                                       _rex_whole, _split_oversized)
+    from ..pipeline import map_rows
 
-    pc = part_chars or PART_CHARS
-    small = docs.filter(F.length(F.coalesce("text", F.lit(""))) <= pc)
-    big = docs.filter(F.length(F.coalesce("text", F.lit(""))) > pc)
-    parts = big.mapInPandas(_make_splitter(pc), PARTS_DDL).repartition(
-        F.col("doc_id"), F.col("part_idx"))
-    ext_small = small.select("doc_id", "text").mapInPandas(
-        _rex_worker, REX_DDL).select("doc_id", "text")
+    small, parts = _split_oversized(docs, part_chars or PART_CHARS)
+    parts = parts.repartition(F.col("doc_id"), F.col("part_idx"))
+    ext_small = map_rows(small, _rex_whole, REX_DDL).select("doc_id", "text")
     ext_big = (
-        parts.mapInPandas(_rex_worker, REX_DDL)
+        map_rows(parts, _rex_part, REX_DDL)
         .groupBy("doc_id")
         .applyInPandasWithState(
             _reassemble_fn,
