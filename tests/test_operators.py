@@ -1,5 +1,5 @@
 """Operator smoke + semantics tests at sf0.001 (full oracle parity is the
-driver's CORRECTNESESS gate; tools/check_oracles.py replicates it locally)."""
+CORRECTNESS gate, which tools/check_oracles.py runs locally)."""
 
 from __future__ import annotations
 
@@ -53,12 +53,11 @@ def test_dedup_exact_finds_injected_duplicates(spark):
 
 def test_minhash_similar_docs_collide(spark):
     """Two near-identical docs must share LSH buckets; a disjoint doc not.
-    Uses the operator's portable hash families (phash)."""
+    Runs the production signature and banding path."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from unipdf_spark.operators import phash
-    from unipdf_spark.operators.dedup import BAND_SIZE, N_HASHES, _shingles
+    from unipdf_spark.operators.dedup import (
+        N_HASHES, band_table, minhash_signatures_pandas)
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     near = base.replace("kappa", "kappa2", 1)
@@ -66,23 +65,19 @@ def test_minhash_similar_docs_collide(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": [1, 2, 3], "text": [base, near, other]})
     )
-    sh = df.select(
-        "doc_id", F.explode(_shingles(F.col("text"))).alias("shingle")
-    ).withColumn("h32", phash.h32(F.col("shingle")))
-    aggs = [
-        F.min(phash.family(i, F.col("h32"))).alias(f"h{i}")
-        for i in range(N_HASHES)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs).collect()
-    sigs = {r["doc_id"]: [r[f"h{i}"] for i in range(N_HASHES)] for r in sig}
+    sig = minhash_signatures_pandas(df).persist()
+    sigs = {r["doc_id"]: [r[f"h{i}"] for i in range(N_HASHES)]
+            for r in sig.collect()}
     agree_near = sum(a == b for a, b in zip(sigs[1], sigs[2]))
     agree_other = sum(a == b for a, b in zip(sigs[1], sigs[3]))
     assert agree_near > N_HASHES * 0.5
     assert agree_other < N_HASHES * 0.2
-    # banding: near pair shares at least one full band
-    bands_1 = [tuple(sigs[1][b * BAND_SIZE : (b + 1) * BAND_SIZE]) for b in range(N_HASHES // BAND_SIZE)]
-    bands_2 = [tuple(sigs[2][b * BAND_SIZE : (b + 1) * BAND_SIZE]) for b in range(N_HASHES // BAND_SIZE)]
-    assert any(a == b for a, b in zip(bands_1, bands_2))
+    # banding: near pair shares at least one (band, band_hash) bucket
+    buckets: dict = {}
+    for r in band_table(sig).collect():
+        buckets.setdefault(r["doc_id"], set()).add((r["band"], r["band_hash"]))
+    assert buckets[1] & buckets[2]
+    sig.unpersist()
 
 
 def test_ann_topk_sane(spark):
@@ -149,17 +144,28 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path):
     """Skew armor: a bucket of (MAX_BUCKET+many) identical docs is dropped
     before pair generation — no n² blowup, no pairs from the hot bucket —
     while a normal near-dup pair elsewhere is still found."""
-    from unipdf_spark.operators.dedup import MAX_BUCKET, minhash_lsh_pairs
+    import duckdb
+
+    from unipdf_spark.operators.dedup import (
+        MAX_BUCKET, MINHASH_LSH_SQL, minhash_lsh_pairs)
 
     boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit " * 6
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 6
     b = a.replace("kappa", "kappa2", 1)
     texts = [boiler] * (MAX_BUCKET + 36) + [a, b]
     sf = _write_docs(spark, tmp_path, texts)
-    pairs = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(spark, sf).collect()}
+    rows = sorted(tuple(r) for r in minhash_lsh_pairs(spark, sf).collect())
+    pairs = {(x, y) for x, y, _ in rows}
     n_hot = MAX_BUCKET + 36
     assert (n_hot, n_hot + 1) in pairs  # the real near-dup pair survives
     assert not any(x < n_hot and y < n_hot for x, y in pairs)  # hot bucket dropped
+    # both ends of the [2, MAX_BUCKET] bucket gate agree with the oracle
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf}/documents.parquet/*.parquet')"
+    )
+    assert rows == sorted(map(tuple, con.execute(MINHASH_LSH_SQL).fetchall()))
 
 
 def test_ann_lsh_recall_bounds(spark):

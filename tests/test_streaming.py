@@ -243,7 +243,8 @@ def test_streaming_integrated_extract_dedup(spark, tmp_path):
     working together on a stream."""
     import pandas as pd
 
-    from unipdf_spark.operators.extracted import render_extract_reassemble
+    from unipdf_spark.operators.extracted import REX_DDL, _rex_whole
+    from unipdf_spark.pipeline import map_rows
     from unipdf_spark.streaming.ops import streaming_minhash_candidates
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -261,8 +262,12 @@ def test_streaming_integrated_extract_dedup(spark, tmp_path):
     )
     from pyspark.sql import functions as F
 
-    extracted = render_extract_reassemble(stream).withColumn(
-        "doc_id", F.col("doc_id").cast("string"))  # LSH state keys strings
+    # the map-only small-doc branch of streaming_render_extract_reassemble:
+    # its oversized-doc branch reassembles in an applyInPandasWithState
+    # step, and Spark allows only one of those per streaming query
+    extracted = map_rows(stream, _rex_whole, REX_DDL).select(
+        F.col("doc_id").cast("string").alias("doc_id"),  # LSH state keys strings
+        "text")
     out = streaming_minhash_candidates(extracted)
     q = (
         out.writeStream.format("memory").queryName("intdedup_out")
@@ -345,7 +350,7 @@ def test_streaming_oversized_doc_split(spark, tmp_path):
     import pandas as pd
 
     from unipdf_spark.operators.extracted import (
-        render_extract_reassemble_scalable)
+        reassemble_parts, render_extract_parts)
     from unipdf_spark.streaming.ops import streaming_render_extract_reassemble
 
     ws = re.compile(r"\s+")
@@ -381,7 +386,7 @@ def test_streaming_oversized_doc_split(spark, tmp_path):
     named = spark.createDataFrame(b1)
     batch = {
         r["doc_id"]: r["text"]
-        for r in render_extract_reassemble_scalable(
-            named, part_chars=part_chars).collect()
+        for r in reassemble_parts(render_extract_parts(
+            named, part_chars=part_chars)).collect()
     }
     assert batch == got

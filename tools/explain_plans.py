@@ -1,9 +1,17 @@
-"""Dump `.explain("formatted")` for the headline queries → PLANS.md, with a
-summary of the scale-relevant properties (PushedFilters / ReadSchema /
-broadcast / codegen). Run: python tools/explain_plans.py"""
+"""Dump `.explain("formatted")` physical plans of the operator queries.
+
+    python tools/explain_plans.py           → PLANS.md: the headline
+        queries (plans truncated) with a summary of the scale-relevant
+        properties (PushedFilters / ReadSchema / broadcast / codegen)
+    python tools/explain_plans.py OUT_DIR   → OUT_DIR/<name>.txt: the
+        untruncated plan of every ``all_queries()`` entry
+
+To review a plan change, run the OUT_DIR form in both checkouts and diff
+the two directories after normalizing plan ids (``#n``)."""
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -22,13 +30,31 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    import __spark_entry__ as em
-    from unipdf_spark.pipeline import get_spark
+def dump_all(spark, out_dir: str) -> None:
+    """One untruncated plan file per ``all_queries()`` entry."""
+    from unipdf_spark.operators import all_queries
     from unipdf_spark.plans import explain_str
 
-    spark = get_spark("plans", cores=4)
-    spark.sparkContext.setLogLevel("ERROR")
+    os.makedirs(out_dir, exist_ok=True)
+    for name, fn in sorted(all_queries().items()):
+        try:
+            txt = explain_str(fn(spark, SF))
+        except Exception as e:  # noqa: BLE001
+            txt = f"ERROR: {e}"
+        finally:
+            # a frame cached by an earlier query would show up as an
+            # InMemoryRelation in a later one: each plan must not depend
+            # on which queries ran before it
+            spark.catalog.clearCache()
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(txt)
+    print(f"wrote {len(all_queries())} plans to {out_dir}")
+
+
+def write_plans_md(spark) -> None:
+    import __spark_entry__ as em
+    from unipdf_spark.plans import explain_str
+
     qs = em.queries()
     out = [
         "# PLANS — physical plans of the headline queries\n",
@@ -106,6 +132,17 @@ def main() -> None:
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def main() -> None:
+    from unipdf_spark.pipeline import get_spark
+
+    spark = get_spark("plans", cores=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    if len(sys.argv) > 1:
+        dump_all(spark, sys.argv[1])
+    else:
+        write_plans_md(spark)
     spark.stop()
 
 

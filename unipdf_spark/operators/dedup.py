@@ -5,9 +5,10 @@ Spark-first shapes that survive 100 TB:
 
 * exact/fingerprint dedup — hash + groupBy (one shuffle on the hash key,
   map-side partial agg; canonical pick is min(doc_id), associative);
-* MinHash — explode(shingles) → per-doc min of k hash families (single
-  shuffle on doc_id, partial min map-side); LSH banding turns O(n²) pair
-  search into a groupBy on band keys — only co-bucketed docs pair up;
+* MinHash — one map_rows pass per doc: shingles → md5-derived hashes →
+  numpy min over k hash families (no explode, no shuffle); LSH banding
+  turns O(n²) pair search into a groupBy on band keys — only co-bucketed
+  docs pair up (:func:`lsh_candidate_pairs`);
 * SimHash — ONE within-row aggregate pass with a 60-wide vote-array
   accumulator, then 15-bit-chunk blocking for Hamming≤3 candidate pairs
   (4 chunks: ≤3 differing bits leaves ≥1 chunk equal by pigeonhole);
@@ -27,7 +28,7 @@ import hashlib
 import math
 import re
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..pipeline import map_rows
 from . import phash
@@ -76,18 +77,23 @@ FROM h JOIN g USING (text_hash)
 """
 
 
+def normalized_text() -> Column:
+    """The ``text`` column lowercased, with punctuation stripped and
+    whitespace collapsed (DEDUP_NORM_SQL's normalization)."""
+    return F.trim(
+        F.regexp_replace(
+            F.lower(F.regexp_replace("text", r"[^A-Za-z0-9\s]", " ")), r"\s+", " "
+        )
+    )
+
+
 def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-exact dedup after normalization (lowercase, strip punctuation,
     collapse whitespace) — catches trivially re-formatted duplicates."""
     d = phash.spread(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), spark, heavy=False
     )
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.regexp_replace("text", r"[^A-Za-z0-9\s]", " ")), r"\s+", " "
-        )
-    )
-    h = d.select("doc_id", F.md5(norm).alias("norm_hash"))
+    h = d.select("doc_id", F.md5(normalized_text()).alias("norm_hash"))
     groups = h.groupBy("norm_hash").agg(
         F.min("doc_id").alias("canonical_doc_id"), F.count("*").alias("group_size")
     )
@@ -110,45 +116,6 @@ g AS (SELECT norm_hash, MIN(doc_id) AS canonical_doc_id, COUNT(*) AS group_size
 SELECT doc_id, canonical_doc_id, group_size
 FROM h JOIN g USING (norm_hash)
 """
-
-
-def _shingles(col, n: int = 3):
-    """Distinct word n-gram shingles from a text column."""
-    toks = F.filter(F.split(F.lower(col), r"\s+"), lambda x: x != "")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-    )
-
-
-def attach_minhash_signature(d: DataFrame) -> DataFrame:
-    """(doc_id, text, …) → (doc_id, h0..h31): k=32 portable universal-hash
-    families ((A·h32 + B) mod P over md5-derived shingle hashes). Works on
-    batch AND streaming frames (pure column expressions — shared by the
-    batch operators and the streaming candidate detector).
-
-    Hash each shingle string once, then derive the k families as modular
-    arithmetic — all WITHIN the row and in ONE pass (aggregate with a
-    32-wide running-min accumulator; 32 separate array_min(transform)
-    columns generate 32 re-traversals and a huge codegen class): no
-    explode, no shuffle; identical values to the explode+min form."""
-    h32 = F.transform(_shingles(F.col("text")), lambda s: phash.h32(s))
-    base = d.select("doc_id", h32.alias("h32"))
-
-    def _families(h):
-        # NB: single-parameter lambda only — a two-parameter lambda would be
-        # taken as Spark's (element, index) form
-        return F.array(*[phash.family(i, h) for i in range(N_HASHES)])
-
-    acc = F.aggregate(
-        F.col("h32"),
-        F.array_repeat(F.lit(phash.P).cast("long"), N_HASHES),
-        lambda a, h: F.zip_with(a, _families(h), lambda x, y: F.least(x, y)),
-    )
-    # shingle lists are never empty (empty text yields the [''] shingle),
-    # so the P-initialized accumulator always gets overwritten
-    sigs = [F.element_at(F.col("acc"), i + 1).alias(f"h{i}") for i in range(N_HASHES)]
-    return base.select("doc_id", acc.alias("acc")).select("doc_id", *sigs)
 
 
 def band_table(sig: DataFrame) -> DataFrame:
@@ -181,8 +148,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression form the suite's dominant cost (r3 VERDICT: 7.5 s
     steady-state, 2.5× the next-slowest query). hashlib md5 is
     bit-identical to SQL ``md5`` and the modular family math is exact in
-    int64, so the DuckDB oracle is unchanged. The column-expression form
-    (:func:`attach_minhash_signature`) remains for streaming frames."""
+    int64, so the DuckDB oracle is unchanged. map_rows binds to streaming
+    frames unchanged, so streaming_minhash_candidates uses the same path."""
     return minhash_signatures_pandas(_docs(spark, sf_dir))
 
 
@@ -294,10 +261,10 @@ FROM hs
 """
 
 
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding: docs sharing any (band, band-hash) bucket become candidate
-    pairs; candidates are then verified with true shingle Jaccard. Only
-    bucket-mates join — no cross product at any scale.
+def lsh_candidate_pairs(bt: DataFrame) -> DataFrame:
+    """Band table (doc_id, band, band_hash) → distinct (doc_a < doc_b)
+    pairs of docs sharing a bucket. Only bucket-mates pair — no cross
+    product at any scale.
 
     Skew armor: bucket sizes are counted FIRST (map-side-combinable groupBy —
     safe for any skew) and buckets outside [2, MAX_BUCKET] are dropped with a
@@ -307,34 +274,41 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join (two full shuffled sides; r4 steady-state 4.9 s → 3.2 s). A
     degenerate boilerplate bucket with millions of docs never reaches the
     collect (it fails the count gate), so the worst aggregation buffer and
-    the worst task are both ~MAX_BUCKET-sized.
-    """
-    # persist the band table: the plan references it twice (bucket counts,
-    # member collection); without a cache the md5-shingle signature pass
-    # would be recomputed per reference. At corpus scale this is the
-    # standard 'materialize signatures' step.
-    bt = band_table(minhash_signatures(spark, sf_dir)).persist()
+    the worst task are both ~MAX_BUCKET-sized. ``bt`` is referenced twice
+    (bucket counts, member collection): callers persist it so the
+    signature pass is not recomputed per reference."""
     ok = (
         bt.groupBy("band", "band_hash")
-        .agg(F.count("*").alias("n"))
+        .agg(F.count(F.lit(1)).alias("n"))
         .filter((F.col("n") >= 2) & (F.col("n") <= MAX_BUCKET))
         .select("band", "band_hash")
     )
-    members = bt.join(ok, ["band", "band_hash"], "left_semi")
-    # persist the candidate set: it is re-referenced by pair_ids (both
-    # legs), the verify join, and the shingle semi-join — without a cache
-    # each reference replays the bucket collect + pair explode from the
-    # band table. Bounded by candidate count (≤ MAX_BUCKET²/2 per bucket),
-    # so the cache is small at any scale.
-    cand = (
-        members.groupBy("band", "band_hash")
+    return (
+        bt.join(ok, ["band", "band_hash"], "left_semi")
+        .groupBy("band", "band_hash")
         .agg(F.collect_list("doc_id").alias("members"))
         .select(F.explode("members").alias("doc_a"), "members")
         .select("doc_a", F.explode("members").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .distinct()
-        .persist()
     )
+
+
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH banding: docs sharing any (band, band-hash) bucket become candidate
+    pairs (:func:`lsh_candidate_pairs`, count-gated against skew);
+    candidates are then verified with true shingle Jaccard."""
+    # persist the band table: the plan references it twice (bucket counts,
+    # member collection); without a cache the md5-shingle signature pass
+    # would be recomputed per reference. At corpus scale this is the
+    # standard 'materialize signatures' step.
+    bt = band_table(minhash_signatures(spark, sf_dir)).persist()
+    # persist the candidate set: it is re-referenced by pair_ids (both
+    # legs), the verify join, and the shingle semi-join — without a cache
+    # each reference replays the bucket collect + pair explode from the
+    # band table. Bounded by candidate count (≤ MAX_BUCKET²/2 per bucket),
+    # so the cache is small at any scale.
+    cand = lsh_candidate_pairs(bt).persist()
     # verify candidates with true Jaccard over shingle sets — computed ONLY
     # for docs that appear in a candidate pair (semi-join before the shingle
     # pass: at corpus scale candidates ≪ corpus); joins are unhinted —
@@ -594,9 +568,10 @@ def _interleaved_subkey_sql(expr: str, sc: str) -> str:
 
 def _simhash_blocking(fp: DataFrame):
     """Shared hierarchical blocking over a (doc_id, simhash) frame.
-    Returns (lvl0, lvl1, hot_sub): level-0/1 block memberships for pair
-    generation and the still-oversized level-1 members (doc_id, simhash)
-    that form level-2 swarms."""
+    Returns (lvl0, lvl1, hot_sub, cnt1): level-0/1 block memberships for
+    pair generation, the still-oversized level-1 members (doc_id, simhash)
+    that form level-2 swarms, and the level-1 block sizes (chunk, key, sc,
+    skey, n1)."""
     chunk_structs = F.array(*[
         F.struct(
             F.lit(c).alias("chunk"),
@@ -646,7 +621,7 @@ def _simhash_blocking(fp: DataFrame):
                     F.col("skey").cast("string")).alias("block"),
     )
     hot_sub = sub1.filter(F.col("n1") > MAX_BUCKET).select("doc_id", "simhash")
-    return lvl0, lvl1, hot_sub
+    return lvl0, lvl1, hot_sub, cnt1
 
 
 def _simhash_pairs_from_fp(fp: DataFrame) -> DataFrame:
@@ -673,7 +648,7 @@ def _simhash_pairs_from_fp(fp: DataFrame) -> DataFrame:
       reports exactly those blocks, and the swarm clusters carry the
       Hamming-0 mass.
     """
-    lvl0, lvl1, _hot_sub = _simhash_blocking(fp)
+    lvl0, lvl1, _hot_sub, _cnt1 = _simhash_blocking(fp)
     bt = lvl0.unionByName(lvl1)
     return (
         bt.alias("a")
@@ -804,34 +779,9 @@ def simhash_saturated_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     still denser than MAX_BUCKET after level-1 refinement — i.e. exactly
     where Hamming-1..3 recall can degrade to exact-fingerprint matching.
     Empty result ⇒ the pair query's ≤3-Hamming guarantee held everywhere."""
-    fp = simhash_fingerprints(spark, sf_dir)
-    chunk_structs = F.array(*[
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.shiftright(F.col("simhash"), 15 * c)
-            .bitwiseAND(F.lit(0x7FFF)).alias("key"),
-        )
-        for c in range(SIM_CHUNKS)
-    ])
-    ch = fp.select(
-        "doc_id", "simhash", F.explode(chunk_structs).alias("cc")
-    ).select("doc_id", "simhash", F.col("cc.chunk").alias("chunk"),
-             F.col("cc.key").alias("key"))
-    cnt0 = ch.groupBy("chunk", "key").agg(F.count(F.lit(1)).alias("n0"))
-    hot = ch.join(cnt0.filter(F.col("n0") > MAX_BUCKET), ["chunk", "key"])
-    sub_structs = F.array(*[
-        F.struct(F.lit(sc).alias("sc"),
-                 _interleaved_subkey(F.col("simhash"), sc).alias("skey"))
-        for sc in range(4)
-    ])
-    sub = hot.select("chunk", "key", F.explode(sub_structs).alias("ss")).select(
-        "chunk", "key", F.col("ss.sc").alias("sc"), F.col("ss.skey").alias("skey")
-    )
-    return (
-        sub.groupBy("chunk", "key", "sc", "skey")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .filter(F.col("size") > MAX_BUCKET)
-    )
+    cnt1 = _simhash_blocking(simhash_fingerprints(spark, sf_dir))[3]
+    return (cnt1.filter(F.col("n1") > MAX_BUCKET)
+            .withColumnRenamed("n1", "size"))
 
 
 SIMHASH_SATURATED_SQL = f"""

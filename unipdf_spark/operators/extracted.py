@@ -17,10 +17,13 @@ chunking (the render plan is seeded per doc_id), so the pair is a true
 re-formatted duplicate — same content, different layout — exactly what
 normalized dedup and MinHash LSH exist to catch.
 
-Scale shape (100 TB): render and extraction are map-only ``map_rows``
-stages (no payload shuffle); the reassembled-text frame is persisted once
-and feeds both the dedup-hash and signature paths; LSH banding reuses the
-count-gated bounded-bucket pattern from :mod:`dedup` (no self-join, no
+Scale shape (100 TB): render and extraction run fused in one map-only
+``map_rows`` stage per part (:func:`render_extract_parts`: no payload
+shuffle for small docs, bounded parts for oversized ones, reassembled by
+:func:`reassemble_parts`); the reassembled-text frame is persisted once
+and feeds both the dedup-hash and signature paths; the normalization is
+:func:`dedup.normalized_text` and the LSH candidates come from
+:func:`dedup.lsh_candidate_pairs` (count-gated buckets: no self-join, no
 mega-bucket task).
 """
 
@@ -39,7 +42,9 @@ from .dedup import (
     _SIG_COLS_SQL,
     _BANDS_SQL,
     band_table,
+    lsh_candidate_pairs,
     minhash_signatures_pandas,
+    normalized_text,
 )
 
 CLONE_OFFSET = 1_000_000
@@ -58,7 +63,12 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rex_text(doc_id: str, text: str | None) -> tuple[str, str | None]:
     """Render ``text`` into a PDF, span-extract it and reassemble its text
-    spans: (whitespace-collapsed text, extraction error)."""
+    spans: (whitespace-collapsed text, extraction error). Render and
+    extraction are FUSED in one per-row function: as two chained
+    MapInPandas nodes every rendered PDF (and its span structs) would
+    cross Python→JVM→Python through Arrow once for nothing — the render
+    here is only the synthetic source; a real corpus enters at the
+    extraction stage, which stays the standalone pipeline.run_extraction."""
     from ..fixtures.gen import make_text_doc
     from ..pdf.extract import extract_spans
 
@@ -66,24 +76,6 @@ def _rex_text(doc_id: str, text: str | None) -> tuple[str, str | None]:
     res = extract_spans(pdf)
     joined = " ".join(s["text"] for s in res.spans if s["kind"] == "text")
     return _WS.sub(" ", joined).strip(), res.error
-
-
-def _render_extract(doc_id, text):
-    yield int(doc_id[4:]), _rex_text(doc_id, text)[0]
-
-
-def render_extract_reassemble(named: DataFrame) -> DataFrame:
-    """(doc_id 'doc_NNNNNNNN', text) → (doc_id bigint, text) where the
-    output text made a full render→span-extraction→reassembly trip
-    through the PDF engine. FUSED into ONE per-row function: as two
-    chained MapInPandas nodes every rendered PDF (and its span structs)
-    would cross Python→JVM→Python through Arrow once for nothing — the
-    render here is only the synthetic source; a real corpus enters at the
-    extraction stage, which stays the standalone pipeline.run_extraction.
-    Map-only (no payload shuffle) and streaming-capable (map_rows binds
-    to micro-batches unchanged — see the streaming integrated-path test)."""
-    return pipeline.map_rows(named.select("doc_id", "text"), _render_extract,
-                             "doc_id bigint, text string")
 
 
 PART_CHARS = 65536  # oversized-doc task atom: ~0.6 s render+extract each
@@ -177,15 +169,6 @@ def reassemble_parts(parts_ext: DataFrame) -> DataFrame:
     return singles.unionByName(joined)
 
 
-def render_extract_reassemble_scalable(named: DataFrame,
-                                       part_chars: int = PART_CHARS
-                                       ) -> DataFrame:
-    """Batch-mode render→extract→reassembly with the oversized-doc split
-    (streaming keeps :func:`render_extract_reassemble` — the reassembly
-    aggregate would need stateful semantics there)."""
-    return reassemble_parts(render_extract_parts(named, part_chars))
-
-
 def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents(+planted clones) → PDFs → span extraction → reassembled
     text → normalized dedup groups + MinHash LSH candidate-partner counts,
@@ -198,16 +181,8 @@ def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ).alias("doc_id"),
         "text",
     )
-    extracted = render_extract_reassemble_scalable(named).persist()
+    extracted = reassemble_parts(render_extract_parts(named)).persist()
 
-    # normalized dedup ON EXTRACTED TEXT (same normalization as
-    # dedup_normalized: lowercase, strip punctuation, collapse whitespace)
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.regexp_replace("text", r"[^A-Za-z0-9\s]", " ")),
-            r"\s+", " ",
-        )
-    )
     # token stats on the extracted text: the count must equal DuckDB's
     # over the ORIGINAL text — an extra per-doc integrity column beyond
     # the dedup hash. The reassembled text is single-space collapsed with
@@ -216,8 +191,10 @@ def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first form of this column cost +2 s on the sf0.1 suite)
     n_tokens = F.when(F.length("text") == 0, F.lit(0)).otherwise(
         F.size(F.split("text", " ", -1))).cast("long")
+    # normalized dedup ON EXTRACTED TEXT (the dedup_normalized
+    # normalization: lowercase, strip punctuation, collapse whitespace)
     h = extracted.select(
-        "doc_id", F.md5(norm).alias("norm_hash"),
+        "doc_id", F.md5(normalized_text()).alias("norm_hash"),
         n_tokens.alias("n_tokens"),
     )
     groups = h.groupBy("norm_hash").agg(
@@ -227,25 +204,10 @@ def extracted_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = h.join(groups, "norm_hash").select(
         "doc_id", "canonical_doc_id", "group_size", "n_tokens")
 
-    # MinHash LSH candidate partners ON EXTRACTED TEXT: count-gated
-    # buckets (skew armor, same [2, MAX_BUCKET] gate as minhash_lsh_pairs)
-    # → bounded member collect → distinct pairs → per-doc partner count.
+    # MinHash LSH candidate partners ON EXTRACTED TEXT: the
+    # minhash_lsh_pairs candidate stage → per-doc partner count.
     bt = band_table(minhash_signatures_pandas(extracted)).persist()
-    ok = (
-        bt.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= MAX_BUCKET))
-        .select("band", "band_hash")
-    )
-    cand = (
-        bt.join(ok, ["band", "band_hash"], "left_semi")
-        .groupBy("band", "band_hash")
-        .agg(F.collect_list("doc_id").alias("members"))
-        .select(F.explode("members").alias("doc_a"), "members")
-        .select("doc_a", F.explode("members").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
+    cand = lsh_candidate_pairs(bt)
     partners = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))

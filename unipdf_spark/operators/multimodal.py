@@ -19,6 +19,7 @@ import hashlib
 from pyspark.sql import DataFrame, functions as F
 
 from ..pipeline import gen_docs_pdf, map_rows
+from .similarity import _dot
 
 MEDIA_SCHEMA = (
     "media_ref string, doc_id string, kind string, payload binary, "
@@ -241,14 +242,7 @@ def media_feature_dedup(media: DataFrame) -> DataFrame:
     )
     a = feats.alias("a")
     b = feats.alias("b")
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("a.feature"), F.col("b.feature"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot(F.col("a.feature"), F.col("b.feature"))
     return (
         a.join(
             b,
@@ -285,34 +279,15 @@ def bilevel_features(media: DataFrame) -> DataFrame:
 
 
 def _ink_ratio_row(ref, doc_id, payload, w, h, k, b1, codec):
-    from ..pdf.ccitt import decode_ccitt
-    from ..pdf.jbig2 import decode_jbig2_packed
-
     try:
-        if codec == "JBIG2Decode":
-            # JBIG2 convention: 1 = black, always
-            bits, bw, bh = decode_jbig2_packed(bytes(payload), int(w), int(h))
-            black_is_one, width = True, bw
-        else:
-            black_is_one = bool(b1)
-            width = int(w)
-            bits = decode_ccitt(
-                bytes(payload),
-                {"K": int(k), "Columns": width, "BlackIs1": black_is_one},
-            )
-        stride = (width + 7) // 8
-        n_black = total = 0
-        for r in range(len(bits) // stride):
-            for x in range(width):
-                bit = (bits[r * stride + (x >> 3)] >> (7 - (x & 7))) & 1
-                # PDF CCITT default: 0 = black; /BlackIs1 (and JBIG2
-                # foreground) invert
-                n_black += bit if black_is_one else (1 - bit)
-                total += 1
+        ink = _decode_pixels(bytes(payload), int(w), int(h), codec, int(k),
+                             bool(b1))
     except Exception:  # noqa: BLE001 — per-row error path
         yield ref, doc_id, int(w), int(h), 0.0, False
         return
-    yield ref, doc_id, int(w), int(h), round(n_black / max(total, 1), 6), True
+    # an empty bitmap has no ink (the mean of nothing is nan)
+    ratio = float(ink.mean()) if ink.size else 0.0
+    yield ref, doc_id, int(w), int(h), round(ratio, 6), True
 
 
 GRAY_SCHEMA = (

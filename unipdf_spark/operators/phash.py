@@ -2,13 +2,15 @@
 
 Spark's ``xxhash64`` has no DuckDB analog, so operators built on it can only
 get rows-only correctness checks. Instead we derive a 60-bit integer from the
-first 15 hex chars of MD5 (both engines produce identical MD5 hex), then build
-hash families with plain modular arithmetic — every derived value (MinHash
-families, LSH band keys, SimHash bits, hyperplane weights) is expressible as
-the same arithmetic in Spark Catalyst expressions and ANSI/DuckDB SQL.
+first 15 hex chars of MD5 (Python's hashlib and DuckDB produce identical MD5
+hex), then build hash families with plain modular arithmetic. The Spark
+operators compute base60/h32/family in numpy inside their map_rows workers
+(``dedup._md5_60`` with A/B/P from here) and the LSH band key with the
+Catalyst :func:`fold`; the ``*_sql`` twins spell the same arithmetic for the
+DuckDB oracles; hyperplane weights are literals inlined into both plans.
 
-All constants are Python-side literals inlined into both plans; arithmetic is
-chosen so intermediates stay under 2^63 (BIGINT-safe in both engines):
+All constants are Python-side literals; arithmetic is chosen so
+intermediates stay under 2^63 (BIGINT-safe in both engines):
 
 * base60(s)   = int(md5(s)[:15], 16)                  (< 2^60)
 * h32(s)      = base60(s) % P,  P = 4294967291        (< 2^32, largest 32-bit prime)
@@ -30,30 +32,17 @@ A = [((i * 0x9E3779B1 + 0x7F4A7C15) % (1 << 30)) | 1 for i in range(N_FAMILIES)]
 B = [(i * 0xC2B2AE35 + 0x165667B1) % P for i in range(N_FAMILIES)]
 
 
-def base60(col: Column) -> Column:
-    """60-bit integer hash of a string column (Spark side)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def base60_sql(expr: str) -> str:
-    """The identical hash in DuckDB SQL."""
+    """60-bit integer hash of a string expression in DuckDB SQL."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def h32(col: Column) -> Column:
-    return base60(col) % P
 
 
 def h32_sql(expr: str) -> str:
     return f"({base60_sql(expr)} % {P})"
 
 
-def family(i: int, h: Column) -> Column:
-    """i-th universal-hash family over an h32 value (Spark side)."""
-    return (F.lit(A[i]) * h + F.lit(B[i])) % P
-
-
 def family_sql(i: int, expr: str) -> str:
+    """i-th universal-hash family over an h32 value."""
     return f"(({A[i]} * {expr} + {B[i]}) % {P})"
 
 

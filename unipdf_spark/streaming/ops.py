@@ -198,9 +198,8 @@ def streaming_minhash_candidates(docs: DataFrame) -> DataFrame:
     (true Jaccard) stays a batch join over the candidate output."""
     from ..operators.dedup import minhash_signatures_pandas, band_table
 
-    # mapInPandas is streaming-capable: the numpy signature path (bit-
-    # identical to the column-expression form, see dedup.py) serves
-    # micro-batches too — the interpreted-HOF fold was the per-batch cost
+    # mapInPandas is streaming-capable: the batch operator's numpy
+    # signature path serves micro-batches too
     bands = band_table(minhash_signatures_pandas(docs))
     return bands.groupBy("band", "band_hash").applyInPandasWithState(
         _lsh_cand_fn,
@@ -238,7 +237,7 @@ def streaming_render_extract_reassemble(docs: DataFrame,
                                         part_chars: int | None = None
                                         ) -> DataFrame:
     """Streaming variant of the oversized-doc scale path (the batch side
-    is operators.extracted.render_extract_reassemble_scalable): texts
+    is operators.extracted.render_extract_parts + reassemble_parts): texts
     beyond PART_CHARS split into bounded word-boundary atoms that extract
     as independent tasks (hash-spread — range partitioning needs a
     sampling pass a stream cannot do), then reassemble per doc via a
