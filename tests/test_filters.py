@@ -1565,3 +1565,41 @@ def test_encoder_output_bytes_pinned(case):
         stream, page = out
         out = stream + repr([[int(v) for v in r] for r in page]).encode()
     assert hashlib.md5(out).hexdigest() == _PIN_MD5[case]
+
+
+def test_fixtures_never_import_the_engine():
+    """Source guard for fixture independence: no module under
+    ``unipdf_spark/fixtures/`` imports from ``unipdf_spark.pdf`` (absolute,
+    relative or by string), so the writer-side encoders and goldens stay
+    independent oracles for the engine's decoders and round trips never
+    turn into self-checks."""
+    import ast
+    from pathlib import Path
+
+    import unipdf_spark.fixtures as fixtures
+
+    root = Path(fixtures.__file__).resolve().parent
+    engine = "unipdf_spark.pdf"
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        package = ["unipdf_spark", "fixtures",
+                   *path.relative_to(root).parent.parts]
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                # resolve `from .. import pdf` / `from ..pdf import x`
+                base = package[:len(package) + 1 - node.level] \
+                    if node.level else []
+                base = ".".join(base + [node.module or ""]).rstrip(".")
+                names = [base] + [f"{base}.{a.name}" for a in node.names]
+            elif (isinstance(node, ast.Call) and node.args
+                  and isinstance(node.args[0], ast.Constant)
+                  and getattr(node.func, "id", getattr(node.func, "attr", ""))
+                  in ("__import__", "import_module")):
+                names = [str(node.args[0].value)]
+            else:
+                continue
+            hits += [(path.name, node.lineno, n) for n in names
+                     if n == engine or n.startswith(engine + ".")]
+    assert hits == []

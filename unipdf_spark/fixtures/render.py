@@ -1,14 +1,39 @@
-"""Minimal-but-real PDF file writer for fixtures.
+"""Writer side of the fixtures: a minimal-but-real PDF file writer and the
+encoders of the streams it carries.
 
-Produces complete PDFs: header, numbered objects, Flate-encoded content
-streams, xref table, trailer. Intentionally independent from the engine's
-parser (`unipdf_spark.pdf`) — round-trip tests would be meaningless otherwise.
+Sections, each coding step written once:
+
+- PDF writer: `PdfFileWriter` produces complete PDFs (header, numbered
+  objects, Flate-encoded content streams, xref table or stream, trailer),
+  with the standard (RC4) and AES-256 encryption parameters.
+- Stream filters: `encode_chain` applies the LZW, RunLength, ASCIIHex,
+  ASCII85 and Flate encoders of a /Filter chain.
+- CCITT (T.4/T.6): `_ccitt_1d_row` and `_ccitt_2d_row` code every row of
+  G3-1D, G3-2D and G4, including the JBIG2 MMR bitmaps.
+- JBIG2 (T.88, embedded organization): the MQ coder; `_jb2_generic_into`
+  for generic regions; `_jb2_height_classes` for arithmetic symbol
+  dictionaries; `_jb2_text_into` and `_jb2_huff_text_into` for arithmetic
+  and Huffman text regions, also the aggregate symbols of refinement
+  dictionaries; `_jb2_stream` (page information + segment headers) and
+  `_jb2_region_info` for the headers; `_jb2_compose` for composed pages,
+  aggregate canvases and halftone pages.
+- JPEG (T.81): `_jpg_sequential` writes every sequential DCT stream (gray
+  8/12-bit with restart intervals, 4:4:4, 4:2:0, 4:1:1) from (plane, H, V)
+  components; the progressive and lossless encoders share its DCT and
+  quantization (`_jpg_block`), padding, magnitude and segment helpers.
+
+Everything here is written from the specifications, independently of the
+engine's parser and decoders (`unipdf_spark.pdf`) — round-trip tests would
+be meaningless otherwise. No module under `unipdf_spark/fixtures/` imports
+from `unipdf_spark.pdf`; a test guards this. Media spans are identified by
+the md5 of the encoded bytes, so a test also pins each encoder's output.
 """
 
 from __future__ import annotations
 
 import base64
 import binascii
+import functools
 import re
 import hashlib
 import struct
@@ -471,6 +496,61 @@ def _ccitt_run(w: "_BitWriter", run: int, white: bool) -> None:
     w.write(term[run])
 
 
+def _ccitt_1d_row(w: "_BitWriter", changes: list[int], columns: int) -> None:
+    """One T.4 one-dimensional (MH) row: alternating white/black runs
+    between the colour changes."""
+    pos, white = 0, True
+    for c in changes + [columns]:
+        _ccitt_run(w, c - pos, white)
+        pos = c
+        white = not white
+        if pos >= columns:
+            break
+    if pos < columns:
+        _ccitt_run(w, columns - pos, white)
+
+
+def _ccitt_2d_row(w: "_BitWriter", cur: list[int], ref: list[int],
+                  columns: int) -> None:
+    """One T.4/T.6 two-dimensional row: pass, vertical and horizontal
+    modes coding the changes `cur` against the reference row's `ref`."""
+    a0 = -1
+    white = True
+    while a0 < columns:
+        # a1: next change right of a0 (color flip from current color)
+        a1 = columns
+        for c in cur:
+            if c > (a0 if a0 >= 0 else -1):
+                a1 = c
+                break
+        i = 0
+        while i < len(ref) and ref[i] <= (a0 if a0 >= 0 else -1):
+            i += 1
+        if (i % 2 == 0) != white:
+            i += 1
+        b1 = ref[i] if i < len(ref) else columns
+        b2 = ref[i + 1] if i + 1 < len(ref) else columns
+        if b2 < a1:
+            w.write("0001")  # pass
+            a0 = b2
+        elif abs(a1 - b1) <= 3:
+            w.write({0: "1", 1: "011", -1: "010", 2: "000011",
+                     -2: "000010", 3: "0000011", -3: "0000010"}[a1 - b1])
+            a0 = a1
+            white = not white
+        else:  # horizontal
+            a2 = columns
+            for c in cur:
+                if c > a1:
+                    a2 = c
+                    break
+            start = a0 if a0 > 0 else 0
+            w.write("001")
+            _ccitt_run(w, a1 - start, white)
+            _ccitt_run(w, a2 - a1, not white)
+            a0 = a2
+
+
 def ccitt_g4_encode(rows: list[list[bool]], columns: int) -> bytes:
     """Generator-side ITU-T T.6 (Group 4) encoder — independent of the
     engine's decoder; fixture-side T.4 code tables (ccitt_codes)."""
@@ -489,41 +569,7 @@ def _ccitt_g4_into(w: "_BitWriter", rows: list[list[bool]],
     ref = [columns, columns]
     for row in rows:
         cur = _ccitt_changes(row)
-        a0 = -1
-        white = True
-        while a0 < columns:
-            # a1: next change right of a0 (color flip from current color)
-            a1 = columns
-            for c in cur:
-                if c > (a0 if a0 >= 0 else -1):
-                    a1 = c
-                    break
-            i = 0
-            while i < len(ref) and ref[i] <= (a0 if a0 >= 0 else -1):
-                i += 1
-            if (i % 2 == 0) != white:
-                i += 1
-            b1 = ref[i] if i < len(ref) else columns
-            b2 = ref[i + 1] if i + 1 < len(ref) else columns
-            if b2 < a1:
-                w.write("0001")  # pass
-                a0 = b2
-            elif abs(a1 - b1) <= 3:
-                w.write({0: "1", 1: "011", -1: "010", 2: "000011",
-                         -2: "000010", 3: "0000011", -3: "0000010"}[a1 - b1])
-                a0 = a1
-                white = not white
-            else:  # horizontal
-                a2 = columns
-                for c in cur:
-                    if c > a1:
-                        a2 = c
-                        break
-                start = a0 if a0 > 0 else 0
-                w.write("001")
-                _ccitt_run(w, a1 - start, white)
-                _ccitt_run(w, a2 - a1, not white)
-                a0 = a2
+        _ccitt_2d_row(w, cur, ref, columns)
         ref = cur
 
 
@@ -532,17 +578,7 @@ def ccitt_g3_1d_encode(rows: list[list[bool]], columns: int) -> bytes:
     w = _BitWriter()
     for row in rows:
         w.write("000000000001")  # EOL
-        changes = _ccitt_changes(row) + [columns]
-        pos = 0
-        white = True
-        for c in changes:
-            _ccitt_run(w, c - pos, white)
-            pos = c
-            white = not white
-            if pos >= columns:
-                break
-        if pos < columns:
-            _ccitt_run(w, columns - pos, white)
+        _ccitt_1d_row(w, _ccitt_changes(row), columns)
     return w.bytes()
 
 
@@ -556,53 +592,12 @@ def ccitt_g3_2d_encode(rows: list[list[bool]], columns: int,
     for r, row in enumerate(rows):
         cur = _ccitt_changes(row)
         w.write("000000000001")  # EOL
-        if r % k == 0:  # 1D row
+        if r % k == 0:
             w.write("1")
-            pos, white = 0, True
-            for c in cur + [columns]:
-                _ccitt_run(w, c - pos, white)
-                pos = c
-                white = not white
-                if pos >= columns:
-                    break
-            if pos < columns:
-                _ccitt_run(w, columns - pos, white)
-        else:  # 2D row against ref
+            _ccitt_1d_row(w, cur, columns)
+        else:
             w.write("0")
-            a0, white = -1, True
-            while a0 < columns:
-                a1 = columns
-                for c in cur:
-                    if c > (a0 if a0 >= 0 else -1):
-                        a1 = c
-                        break
-                i = 0
-                while i < len(ref) and ref[i] <= (a0 if a0 >= 0 else -1):
-                    i += 1
-                if (i % 2 == 0) != white:
-                    i += 1
-                b1 = ref[i] if i < len(ref) else columns
-                b2 = ref[i + 1] if i + 1 < len(ref) else columns
-                if b2 < a1:
-                    w.write("0001")
-                    a0 = b2
-                elif abs(a1 - b1) <= 3:
-                    w.write({0: "1", 1: "011", -1: "010", 2: "000011",
-                             -2: "000010", 3: "0000011",
-                             -3: "0000010"}[a1 - b1])
-                    a0 = a1
-                    white = not white
-                else:
-                    a2 = columns
-                    for c in cur:
-                        if c > a1:
-                            a2 = c
-                            break
-                    start = a0 if a0 > 0 else 0
-                    w.write("001")
-                    _ccitt_run(w, a1 - start, white)
-                    _ccitt_run(w, a2 - a1, not white)
-                    a0 = a2
+            _ccitt_2d_row(w, cur, ref, columns)
         ref = cur
     return w.bytes()
 
@@ -721,9 +716,6 @@ _JB2_FIXED0 = [(-1, -2), (0, -2), (1, -2),
                (-4, 0), (-3, 0), (-2, 0), (-1, 0)]
 _JB2_NOMINAL0 = [(3, -1), (-3, -1), (2, -2), (-2, -2)]
 
-# template-0 pixel layout (nominal AT), raster order
-_JB2_T0 = sorted(_JB2_FIXED0 + _JB2_NOMINAL0, key=lambda p: (p[1], p[0]))
-
 
 def _jb2_tpgdon_ctx(at) -> int:
     """Template-0 TPGDON pseudo-context for arbitrary AT positions: the
@@ -743,14 +735,24 @@ def _jb2_tpgdon_ctx(at) -> int:
     return ctx
 
 
-def _jb2_generic_body(rows: list[list[bool]], cols: int,
-                      at=None, tpgdon: bool = False) -> bytes:
-    enc = _MQEncoder()
-    contexts: dict[int, list] = {}
+def _jb2_generic_into(enc: "_MQEncoder", contexts: dict,
+                      rows: list[list[bool]], cols: int,
+                      skip: list | None = None, at=None,
+                      tpgdon: bool = False) -> None:
+    """Template-0 generic region coding (§6.2.5) into an MQ encoder + GB
+    context store: a fresh pair for one region, or one pair shared by all
+    bitmaps of a symbol dictionary or halftone region. ``at``: adaptive
+    template pixels (nominal when None); ``tpgdon``: typical prediction,
+    a row equal to the one above costs one decision; ``skip`` (USESKIP,
+    §6.2.5.7): skipped pixels are forced to 0 and NO decision is emitted
+    for them."""
     h = len(rows)
     at = list(at) if at is not None else list(_JB2_NOMINAL0)
     tmpl = sorted(_JB2_FIXED0 + at, key=lambda p: (p[1], p[0]))
-    tp_ctx = _jb2_tpgdon_ctx(at)
+    tp_ctx = _jb2_tpgdon_ctx(at) if tpgdon else 0
+    if skip is not None:
+        rows = [[bool(v) and not skip[y][x] for x, v in enumerate(r)]
+                for y, r in enumerate(rows)]
 
     def px(x: int, y: int) -> int:
         if 0 <= x < cols and 0 <= y < h:
@@ -768,18 +770,77 @@ def _jb2_generic_body(rows: list[list[bool]], cols: int,
             if ltp:
                 continue  # typical row: copy of the previous one
         for x in range(cols):
+            if skip is not None and skip[y][x]:
+                continue
             ctx = 0
             for dx, dy in tmpl:
                 ctx = (ctx << 1) | px(x + dx, y + dy)
             cx = contexts.setdefault(ctx, [0, 0])
             enc.encode(cx, 1 if rows[y][x] else 0)
-    return enc.flush()
+
+
+def _jb2_at_bytes(at) -> bytes:
+    """AT pixel field: one signed byte each for x and y."""
+    return b"".join(bytes([ax & 0xFF, ay & 0xFF]) for ax, ay in at)
+
+
+def _jb2_region_info(w: int, h: int) -> bytes:
+    """Region segment information field (§7.4.1): w×h at (0, 0),
+    external combination operator OR."""
+    return (w.to_bytes(4, "big") + h.to_bytes(4, "big")
+            + (0).to_bytes(4, "big") + (0).to_bytes(4, "big") + bytes([0]))
 
 
 def _jb2_segment(number: int, seg_type: int, data: bytes,
-                 page: int = 1) -> bytes:
-    return (number.to_bytes(4, "big") + bytes([seg_type & 0x3F, 0x00, page])
+                 refs: list[int] = ()) -> bytes:
+    """Segment header (§7.2: 1-byte referred-to segment numbers, count
+    ≤ 4; page 1) + data."""
+    return (number.to_bytes(4, "big") + bytes([seg_type & 0x3F])
+            + bytes([len(refs) << 5]) + bytes(refs) + bytes([1])
             + len(data).to_bytes(4, "big") + data)
+
+
+def _jb2_stream(w: int, h: int, *segments) -> bytes:
+    """Embedded-organization stream of one w×h page: page information
+    (§7.4.8: lossless, no striping), then `segments` = (type, data,
+    refers to the previous segment) numbered from 2, then end of page."""
+    page_info = (w.to_bytes(4, "big") + h.to_bytes(4, "big")
+                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
+                 + bytes([0x01]) + (0).to_bytes(2, "big"))
+    out = _jb2_segment(1, 48, page_info)
+    for n, (seg_type, data, ref_prev) in enumerate(segments, start=2):
+        out += _jb2_segment(n, seg_type, data, [n - 1] if ref_prev else [])
+    return out + _jb2_segment(len(segments) + 2, 49, b"")
+
+
+def _jb2_compose(w: int, h: int, placed) -> list[list[int]]:
+    """OR every (bitmap, x, y) of `placed`, (x, y) its top-left pixel,
+    onto a w×h page of 0/1 rows, clipped to the page."""
+    page = [[0] * w for _ in range(h)]
+    for bmp, x, y in placed:
+        for yy, srow in enumerate(bmp):
+            if 0 <= y + yy < h:
+                prow = page[y + yy]
+                for xx, v in enumerate(srow):
+                    if v and 0 <= x + xx < w:
+                        prow[x + xx] = 1
+    return page
+
+
+def _jb2_generic_region(rows: list[list[bool]], cols: int,
+                        mmr: bool = False, tpgdon: bool = False,
+                        at_pixels=None) -> bytes:
+    """Immediate lossless generic region segment data (type 38): MMR
+    (T.6) coding via the writer's independent G4 encoder, or MQ
+    template-0 coding with optional TPGDON and custom AT positions."""
+    info = _jb2_region_info(cols, len(rows))
+    if mmr:
+        return info + bytes([0x01]) + ccitt_g4_encode(rows, cols)
+    at = list(at_pixels) if at_pixels is not None else _JB2_NOMINAL0
+    enc = _MQEncoder()
+    _jb2_generic_into(enc, {}, rows, cols, at=at, tpgdon=tpgdon)
+    return (info + bytes([0x08 if tpgdon else 0x00])  # MQ, template 0
+            + _jb2_at_bytes(at) + enc.flush())
 
 
 def jbig2_encode(rows: list[list[bool]], cols: int, mmr: bool = False,
@@ -788,26 +849,8 @@ def jbig2_encode(rows: list[list[bool]], cols: int, mmr: bool = False,
     generic region (type 38). mmr=True uses MMR (T.6) region coding via the
     writer's independent G4 encoder; else MQ template-0 arithmetic coding,
     optionally with TPGDON typical-prediction and custom AT positions."""
-    h = len(rows)
-    page_info = (cols.to_bytes(4, "big") + h.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    region_info = (cols.to_bytes(4, "big") + h.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))  # external comb op OR
-    if mmr:
-        gflags = bytes([0x01])
-        at = b""
-        body = ccitt_g4_encode(rows, cols)
-    else:
-        gflags = bytes([0x08 if tpgdon else 0x00])  # MQ, template 0
-        at_pts = list(at_pixels) if at_pixels is not None else _JB2_NOMINAL0
-        at = b"".join(bytes([ax & 0xFF, ay & 0xFF]) for ax, ay in at_pts)
-        body = _jb2_generic_body(rows, cols, at=at_pts, tpgdon=tpgdon)
-    seg1 = _jb2_segment(1, 48, page_info)
-    seg2 = _jb2_segment(2, 38, region_info + gflags + at + body)
-    seg3 = _jb2_segment(3, 49, b"")  # end of page
-    return seg1 + seg2 + seg3
+    return _jb2_stream(cols, len(rows), (
+        38, _jb2_generic_region(rows, cols, mmr, tpgdon, at_pixels), False))
 
 
 def _jb2_int_ctx():
@@ -862,352 +905,7 @@ def _jb2_enc_iaid(enc: "_MQEncoder", cx: list, symcodelen: int, sym_id: int) -> 
         prev = (prev << 1) | b
 
 
-def _jb2_generic_into(enc: "_MQEncoder", contexts: dict,
-                      rows: list[list[bool]], cols: int,
-                      skip: list | None = None) -> None:
-    """Template-0 generic coding into an EXISTING MQ encoder + GB context
-    store (symbol-dictionary semantics: one coder for all symbol bitmaps).
-    ``skip`` (USESKIP, §6.2.5.7): skipped pixels are forced to 0 and NO
-    decision is emitted for them."""
-    h = len(rows)
-    if skip is not None:
-        rows = [[bool(v) and not skip[y][x] for x, v in enumerate(r)]
-                for y, r in enumerate(rows)]
-
-    def px(x: int, y: int) -> int:
-        if 0 <= x < cols and 0 <= y < h:
-            return 1 if rows[y][x] else 0
-        return 0
-
-    for y in range(h):
-        for x in range(cols):
-            if skip is not None and skip[y][x]:
-                continue
-            ctx = 0
-            for dx, dy in _JB2_T0:
-                ctx = (ctx << 1) | px(x + dx, y + dy)
-            cx = contexts.setdefault(ctx, [0, 0])
-            enc.encode(cx, 1 if rows[y][x] else 0)
-
-
-def _jb2_segment_refs(number: int, seg_type: int, refs: list[int],
-                      data: bytes, page: int = 1) -> bytes:
-    """Segment header with 1-byte referred-to segment numbers (count ≤ 4)."""
-    rt = bytes([len(refs) << 5])
-    return (number.to_bytes(4, "big") + bytes([seg_type & 0x3F]) + rt
-            + bytes(refs) + bytes([page])
-            + len(data).to_bytes(4, "big") + data)
-
-
-def jbig2_text_encode(symbols: list[list[list[bool]]],
-                      placements: list[tuple[int, int, int]],
-                      cols: int, nrows: int,
-                      ref_corner: int = 1,
-                      transposed: bool = False,
-                      instance_refine: dict | None = None
-                      ) -> tuple[bytes, list[list[int]]]:
-    """Embedded JBIG2 with a SYMBOL DICTIONARY + TEXT REGION (the jbig2enc
-    shape): page info, symbol dict (arithmetic, template 0, all exported),
-    one-strip text region placing (sym_id, x, y) instances, where (x, y)
-    is always the TOP-LEFT pixel of the symbol; ref_corner (0=BL 1=TL
-    2=BR 3=TR) and transposed select the T/S coordinate encoding per
-    T.88 §6.4.5 (transposed: T along x, S along y, strips are columns).
-    ``instance_refine`` maps placement INDEX → a bitmap placed as an
-    SBREFINE=1 refinement of that instance's dictionary symbol (§6.4.11).
-    Returns (stream, composed page rows 0/1)."""
-    instance_refine = instance_refine or {}
-    # --- symbol dictionary segment -------------------------------------
-    order = sorted(range(len(symbols)), key=lambda i: len(symbols[i]))
-    enc = _MQEncoder()
-    gb_ctx: dict = {}
-    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    hcheight = 0
-    i = 0
-    while i < len(order):
-        h = len(symbols[order[i]])
-        _jb2_enc_int(enc, iadh, h - hcheight)
-        hcheight = h
-        symwidth = 0
-        while i < len(order) and len(symbols[order[i]]) == h:
-            w = len(symbols[order[i]][0])
-            _jb2_enc_int(enc, iadw, w - symwidth)
-            symwidth = w
-            _jb2_generic_into(enc, gb_ctx, symbols[order[i]], w)
-            i += 1
-        _jb2_enc_int(enc, iadw, None)  # OOB: end of height class
-    _jb2_enc_int(enc, iaex, 0)              # skip-run 0
-    _jb2_enc_int(enc, iaex, len(symbols))   # export-run all
-    sd_body = enc.flush()
-    at = bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE, 0x100 - 2, 0xFE])
-    sd_data = (0).to_bytes(2, "big") + at \
-        + len(symbols).to_bytes(4, "big") + len(symbols).to_bytes(4, "big") \
-        + sd_body
-    # dictionary order is height-sorted: id in the TEXT REGION indexes the
-    # exported list, so remap caller ids
-    remap = {orig: k for k, orig in enumerate(order)}
-
-    # --- text region segment --------------------------------------------
-    n_syms = len(symbols)
-    symcodelen = max(1, (n_syms - 1).bit_length() if n_syms > 1 else 1)
-    enc2 = _MQEncoder()
-    iadt, iafs, iads = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_cx = [[0, 0] for _ in range(1 << (symcodelen + 1))]
-    refine = bool(instance_refine)
-    iari, iardw, iardh = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iardx, iardy = _jb2_int_ctx(), _jb2_int_ctx()
-    gr_ctx: dict = {}
-
-    def eff_bitmap(p_idx: int, sym_id: int):
-        return instance_refine.get(p_idx, symbols[sym_id])
-
-    by_row: dict[int, list[tuple[int, int, int]]] = {}
-    for p_idx, (sym_id, x, y) in enumerate(placements):
-        bmp0 = eff_bitmap(p_idx, sym_id)
-        if transposed:
-            # encoded T (along x): left edge for TL/BL, right col for TR/BR
-            t_enc = x if ref_corner in (0, 1) else (x + len(bmp0[0]) - 1)
-            s_coord = y
-        else:
-            # encoded T (along y): top edge for TL/TR, bottom row for BL/BR
-            t_enc = y if ref_corner in (1, 3) else (y + len(bmp0) - 1)
-            s_coord = x
-        by_row.setdefault(t_enc, []).append((s_coord, remap[sym_id], p_idx))
-    _jb2_enc_int(enc2, iadt, 0)  # STRIPT init = 0
-    stript = 0
-    firsts = 0
-    n_inst = 0
-    total = len(placements)
-    for t in sorted(by_row):
-        _jb2_enc_int(enc2, iadt, t - stript)
-        stript = t
-        first = True
-        curs = 0
-        for s, sid, p_idx in sorted(by_row[t]):
-            if first:
-                _jb2_enc_int(enc2, iafs, s - firsts)
-                firsts = s
-                curs = s
-                first = False
-            else:
-                _jb2_enc_int(enc2, iads, s - curs)
-                curs = s
-            _jb2_enc_iaid(enc2, iaid_cx, symcodelen, sid)
-            sym = symbols[order[sid]]
-            bmp = instance_refine.get(p_idx)
-            if refine:
-                _jb2_enc_int(enc2, iari, 1 if bmp is not None else 0)
-            if bmp is not None:
-                sw0, sh0 = len(sym[0]), len(sym)
-                wi, hi = len(bmp[0]), len(bmp)
-                _jb2_enc_int(enc2, iardw, wi - sw0)
-                _jb2_enc_int(enc2, iardh, hi - sh0)
-                _jb2_enc_int(enc2, iardx, 0)
-                _jb2_enc_int(enc2, iardy, 0)
-                _jb2_refine_into(enc2, gr_ctx, bmp, sym, wi, hi, sw0, sh0,
-                                 (wi - sw0) >> 1, (hi - sh0) >> 1,
-                                 template=0)
-                sym = bmp
-            curs += (len(sym) if transposed else len(sym[0])) - 1
-            n_inst += 1
-        if n_inst < total:
-            _jb2_enc_int(enc2, iads, None)  # end of strip
-    tr_body = enc2.flush()
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    # SBREFINE bit 1, REFCORNER bits 4-5, TRANSPOSED bit 6; strips=1, OR
-    tr_flags = (((1 if refine else 0) << 1) | ((ref_corner & 3) << 4)
-                | ((1 if transposed else 0) << 6))
-    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF]) if refine else b""
-    tr_data = (region_info + tr_flags.to_bytes(2, "big") + rat
-               + total.to_bytes(4, "big") + tr_body)
-
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 0, sd_data)
-              + _jb2_segment_refs(3, 6, [2], tr_data)
-              + _jb2_segment(4, 49, b""))
-
-    # composed reference bitmap (TL placement, OR)
-    page = [[0] * cols for _ in range(nrows)]
-    for p_idx, (sym_id, x, y) in enumerate(placements):
-        sym = eff_bitmap(p_idx, sym_id)
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
-
-
-def jbig2_huffman_textregion_encode(symbols: list[list[list[bool]]],
-                              placements: list[tuple[int, int, int]],
-                              cols: int, nrows: int,
-                              strips: int = 1,
-                              instance_refine: dict | None = None,
-                              ref_corner: int = 1,
-                              transposed: bool = False
-                              ) -> tuple[bytes, list[list[int]]]:
-    """Embedded JBIG2 with an arithmetic SYMBOL DICTIONARY + SBHUFF=1
-    Huffman TEXT REGION (T.88 §6.4 Huffman branch, §7.4.3.1.7 symbol ID
-    runcodes). Standard table selections FS=B.6, DS=B.8, DT=B.11,
-    RDW/RDH/RDX/RDY=B.15, RSIZE=B.1; (x, y) is always the TOP-LEFT
-    pixel — ref_corner (0=BL 1=TL 2=BR 3=TR) and transposed select the
-    T/S encoding per §6.4.5 (transposed: T along x, S along y).
-    ``instance_refine`` maps placement index → refined bitmap (RI=1:
-    byte-aligned BMSIZE arithmetic GRR chunks sharing one GR context
-    store). Returns (stream, composed page rows 0/1)."""
-    instance_refine = instance_refine or {}
-    # --- symbol dictionary segment (arithmetic, as jbig2_text_encode) ---
-    order = sorted(range(len(symbols)), key=lambda i: len(symbols[i]))
-    enc = _MQEncoder()
-    gb_ctx: dict = {}
-    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    hcheight = 0
-    i = 0
-    while i < len(order):
-        h = len(symbols[order[i]])
-        _jb2_enc_int(enc, iadh, h - hcheight)
-        hcheight = h
-        symwidth = 0
-        while i < len(order) and len(symbols[order[i]]) == h:
-            w = len(symbols[order[i]][0])
-            _jb2_enc_int(enc, iadw, w - symwidth)
-            symwidth = w
-            _jb2_generic_into(enc, gb_ctx, symbols[order[i]], w)
-            i += 1
-        _jb2_enc_int(enc, iadw, None)
-    _jb2_enc_int(enc, iaex, 0)
-    _jb2_enc_int(enc, iaex, len(symbols))
-    at = bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE, 0x100 - 2, 0xFE])
-    sd_data = (0).to_bytes(2, "big") + at \
-        + len(symbols).to_bytes(4, "big") + len(symbols).to_bytes(4, "big") \
-        + enc.flush()
-    remap = {orig: k for k, orig in enumerate(order)}
-
-    # --- Huffman text region segment ------------------------------------
-    n_syms = len(symbols)
-    refine = bool(instance_refine)
-    log_strips = max(0, (strips - 1).bit_length())
-    assert strips == 1 << log_strips
-    bw = _JB2BitWriterMSB()
-    # §7.4.3.1.7: uniform symbol ID code length L → runcode table with a
-    # single 1-bit code for runcode L, emitted once per symbol
-    sym_len = max(1, (n_syms - 1).bit_length() if n_syms > 1 else 1)
-    for rc in range(35):
-        bw.write(1 if rc == sym_len else 0, 4)
-    for _ in range(n_syms):
-        bw.write(0, 1)  # the single runcode's canonical code is '0'
-    bw.align()
-
-    def put(tbl, v):
-        _jb2_huff_put(bw, tbl, v)
-
-    # group placements into strips of `strips` T-rows; the encoded T is
-    # the corner-selected edge of the EFFECTIVE (possibly refined) bitmap
-    def eff_bitmap(p_idx: int, sym_id: int):
-        return instance_refine.get(p_idx, symbols[sym_id])
-
-    by_strip: dict[int, list[tuple[int, int, int, int]]] = {}
-    for p_idx, (sym_id, x, y) in enumerate(placements):
-        bmp0 = eff_bitmap(p_idx, sym_id)
-        if transposed:
-            t_enc = x if ref_corner in (0, 1) else x + len(bmp0[0]) - 1
-            s_coord = y
-        else:
-            t_enc = y if ref_corner in (1, 3) else y + len(bmp0) - 1
-            s_coord = x
-        base = (t_enc // strips) * strips
-        by_strip.setdefault(base, []).append((s_coord, t_enc - base,
-                                              remap[sym_id], p_idx))
-    put("B11", 1)  # STRIPT init: stript = -strips
-    stript = -strips
-    firsts = 0
-    n_inst = 0
-    total = len(placements)
-    gr_ctx: dict = {}
-    for base in sorted(by_strip):
-        put("B11", (base - stript) // strips)
-        stript = base
-        first = True
-        curs = 0
-        for x, curt, sid, p_idx in sorted(by_strip[base]):
-            if first:
-                put("B6", x - firsts)
-                firsts = x
-                curs = x
-                first = False
-            else:
-                put("B8", x - curs)
-                curs = x
-            if strips != 1:
-                bw.write(curt, log_strips)
-            bw.write(sid, sym_len)  # canonical uniform-length ID code
-            sym = symbols[order[sid]]
-            bmp = instance_refine.get(p_idx)
-            if refine:
-                bw.write(1 if bmp is not None else 0, 1)  # RI raw bit
-            if bmp is not None:
-                sw0, sh0 = len(sym[0]), len(sym)
-                wi, hi = len(bmp[0]), len(bmp)
-                put("B15", wi - sw0)
-                put("B15", hi - sh0)
-                put("B15", 0)  # RDX
-                put("B15", 0)  # RDY
-                genc = _MQEncoder()
-                _jb2_refine_into(genc, gr_ctx, bmp, sym, wi, hi, sw0, sh0,
-                                 (wi - sw0) >> 1, (hi - sh0) >> 1,
-                                 template=0)
-                chunk = genc.flush()
-                put("B1", len(chunk))  # BMSIZE
-                bw.align()
-                bw.out.extend(chunk)
-                sym = bmp
-            curs += (len(sym) if transposed else len(sym[0])) - 1
-            n_inst += 1
-        if n_inst < total:
-            put("B8", None)  # OOB: end of strip
-    tr_body = bw.flush()
-
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    # SBHUFF=1, SBREFINE bit 1, LOGSBSTRIPS bits 2-3, REFCORNER bits 4-5,
-    # TRANSPOSED bit 6
-    tr_flags = (1 | ((1 if refine else 0) << 1) | (log_strips << 2)
-                | ((ref_corner & 3) << 4)
-                | ((1 if transposed else 0) << 6))
-    # huffman flags: FS=B6(0), DS=B8(0), DT=B11(0), RD*=B15(1), RSIZE=B1(0)
-    hflags = (1 << 6) | (1 << 8) | (1 << 10) | (1 << 12)
-    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF]) if refine else b""
-    tr_data = (region_info + tr_flags.to_bytes(2, "big")
-               + hflags.to_bytes(2, "big") + rat
-               + total.to_bytes(4, "big") + tr_body)
-
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 0, sd_data)
-              + _jb2_segment_refs(3, 6, [2], tr_data)
-              + _jb2_segment(4, 49, b""))
-
-    page = [[0] * cols for _ in range(nrows)]
-    for p_idx, (sym_id, x, y) in enumerate(placements):
-        sym = instance_refine.get(p_idx, symbols[sym_id])
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
-
-
-# --- baseline grayscale JPEG writer-side encoder ------------------------------
+# --- JPEG writer-side encoders -----------------------------------------------
 # Independent T.81 transcription (Annex K tables); the engine's decoder
 # (pdf/jpeg.py) is round-trip checked against it by PSNR.
 
@@ -1258,6 +956,19 @@ def _jpg_codes(bits, vals):
     return out
 
 
+# extended-precision Huffman tables (12-bit sequential, T.81 §F.1.2): DC
+# categories reach 15 and AC sizes 14, beyond the Annex K baseline tables
+# — fixture-local canonical tables (all-DC length 5, all-AC length 8;
+# both stay clear of the reserved all-ones code)
+_JPG12_DC_BITS = [0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+_JPG12_DC_VALS = list(range(16))
+_JPG12_AC_VALS = [0x00, 0xF0] + [
+    (run << 4) | size for run in range(16) for size in range(1, 15)
+]
+_JPG12_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPG12_AC_VALS), 0, 0, 0, 0, 0,
+                  0, 0, 0]
+
+
 class _JpgBitWriter:
     def __init__(self) -> None:
         self.out = bytearray()
@@ -1274,31 +985,166 @@ class _JpgBitWriter:
             if b == 0xFF:
                 self.out.append(0x00)  # byte stuffing
 
-    def flush(self) -> bytes:
+    def align(self) -> None:
         if self.n:
             pad = 8 - self.n
             self.write((1 << pad) - 1, pad)  # 1-fill
+
+    def flush(self) -> bytes:
+        self.align()
         return bytes(self.out)
 
     def marker(self, m: int) -> None:
         """Pad to byte boundary and emit a raw marker (RSTn) unstuffed."""
-        if self.n:
-            pad = 8 - self.n
-            self.write((1 << pad) - 1, pad)
+        self.align()
         self.out += bytes([0xFF, m])
 
 
-# extended-precision Huffman tables (12-bit sequential, T.81 §F.1.2): DC
-# categories reach 15 and AC sizes 14, beyond the Annex K baseline tables
-# — fixture-local canonical tables (all-DC length 5, all-AC length 8;
-# both stay clear of the reserved all-ones code)
-_JPG12_DC_BITS = [0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_JPG12_DC_VALS = list(range(16))
-_JPG12_AC_VALS = [0x00, 0xF0] + [
-    (run << 4) | size for run in range(16) for size in range(1, 15)
-]
-_JPG12_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPG12_AC_VALS), 0, 0, 0, 0, 0,
-                  0, 0, 0]
+def _jpg_mag(v: int) -> tuple[int, int]:
+    """(magnitude bits, category) of a signed difference (T.81 F.1.2.1)."""
+    t = abs(v).bit_length()
+    return (v if v >= 0 else v + (1 << t) - 1, t)
+
+
+def _jpg_seg(marker: int, payload: bytes) -> bytes:
+    return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
+        + payload
+
+
+def _jpg_pad(plane, ph: int, pw: int):
+    """`plane` (2-D array) padded to ph×pw by edge replication."""
+    import numpy as np
+
+    h, w = plane.shape
+    p = np.zeros((ph, pw))
+    p[:h, :w] = plane
+    p[h:, :w] = plane[h - 1 : h, :]
+    p[:, w:] = p[:, w - 1 : w]
+    return p
+
+
+@functools.lru_cache(maxsize=None)
+def _jpg_dct():
+    """(8×8 DCT-II basis, K.1 quantization table in natural order)."""
+    import numpy as np
+
+    c = np.zeros((8, 8))
+    for k in range(8):
+        for n in range(8):
+            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
+                np.sqrt(0.125) if k == 0 else 0.5)
+    q = np.zeros(64)
+    q[_JPG_ZZ] = _JPG_Q  # K.1 table is given in zigzag order
+    q = q.reshape(8, 8)
+    c.setflags(write=False)  # cached: shared by every caller
+    q.setflags(write=False)
+    return c, q
+
+
+def _jpg_block(plane, py: int, px: int, shift: float) -> list[int]:
+    """Level-shifted, DCT-transformed, quantized 8×8 block of `plane` at
+    (py, px), in zigzag order."""
+    import numpy as np
+
+    c, q = _jpg_dct()
+    blk = plane[py : py + 8, px : px + 8] - shift
+    quant = np.rint((c @ blk @ c.T) / q).astype("i8")
+    return [int(v) for v in quant.reshape(64)[_JPG_ZZ]]
+
+
+def _jpg_sequential(comps, h: int, w: int, precision: int = 8,
+                    restart_interval: int = 0) -> bytes:
+    """Sequential DCT JPEG (T.81 Annex F; Annex K tables) of the planes
+    `comps` = [(plane, H, V)] with sampling factors H×V, all sharing the
+    K.1 quantization and K.3/K.5 Huffman tables (selector 0 — legal and
+    round-trip-simple). One component is a non-interleaved scan, several
+    an interleaved one whose MCU holds H×V blocks of each, raster order.
+    Precision 8 is baseline (SOF0), 12 extended sequential (SOF1, 2048
+    level shift, 16-category DC table). With restart_interval > 0, emits a
+    DRI segment and RSTn markers every that many MCUs (DC predictor reset
+    + byte realignment)."""
+    import numpy as np
+
+    hmax = max(hs for _p, hs, _v in comps)
+    vmax = max(vs for _p, _h, vs in comps)
+    mh, mw = -(-h // (8 * vmax)), -(-w // (8 * hmax))
+    planes = [_jpg_pad(np.asarray(p, dtype="f8"), mh * 8 * vs, mw * 8 * hs)
+              for p, hs, vs in comps]
+    if precision == 12:
+        dc_bits, dc_vals = _JPG12_DC_BITS, _JPG12_DC_VALS
+        ac_bits, ac_vals = _JPG12_AC_BITS, _JPG12_AC_VALS
+    else:
+        dc_bits, dc_vals = _JPG_DC_BITS, _JPG_DC_VALS
+        ac_bits, ac_vals = _JPG_AC_BITS, _JPG_AC_VALS
+    dc_codes = _jpg_codes(dc_bits, dc_vals)
+    ac_codes = _jpg_codes(ac_bits, ac_vals)
+    shift = float(1 << (precision - 1))
+    bwr = _JpgBitWriter()
+    preds = [0] * len(comps)
+    mcu = 0
+    rst = 0
+    for my in range(mh):
+        for mx in range(mw):
+            if restart_interval and mcu and mcu % restart_interval == 0:
+                bwr.marker(0xD0 + rst)
+                rst = (rst + 1) & 7
+                preds = [0] * len(comps)
+            mcu += 1
+            for ci, (plane, (_p, hs, vs)) in enumerate(zip(planes, comps)):
+                for by in range(vs):
+                    for bx in range(hs):
+                        zz = _jpg_block(plane, (my * vs + by) * 8,
+                                        (mx * hs + bx) * 8, shift)
+                        v, t = _jpg_mag(zz[0] - preds[ci])
+                        preds[ci] = zz[0]
+                        bwr.write(*dc_codes[t])
+                        if t:
+                            bwr.write(v & ((1 << t) - 1), t)
+                        run = 0
+                        last_nz = max((i for i in range(1, 64) if zz[i]),
+                                      default=0)
+                        for k in range(1, last_nz + 1):
+                            if zz[k] == 0:
+                                run += 1
+                                continue
+                            while run > 15:
+                                bwr.write(*ac_codes[0xF0])  # ZRL
+                                run -= 16
+                            v, t = _jpg_mag(zz[k])
+                            bwr.write(*ac_codes[(run << 4) | t])
+                            bwr.write(v & ((1 << t) - 1), t)
+                            run = 0
+                        if last_nz < 63:
+                            bwr.write(*ac_codes[0x00])  # EOB
+    body = bwr.flush()
+
+    ids = range(1, len(comps) + 1)
+    dqt = _jpg_seg(0xDB, bytes([0]) + bytes(_JPG_Q))
+    sof = _jpg_seg(0xC0 if precision == 8 else 0xC1,
+                   bytes([precision]) + h.to_bytes(2, "big")
+                   + w.to_bytes(2, "big") + bytes([len(comps)])
+                   + b"".join(bytes([i, (hs << 4) | vs, 0])
+                              for i, (_p, hs, vs) in zip(ids, comps)))
+    dht = _jpg_seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals)) \
+        + _jpg_seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
+    dri = _jpg_seg(0xDD, restart_interval.to_bytes(2, "big")) \
+        if restart_interval else b""
+    sos = _jpg_seg(0xDA, bytes([len(comps)])
+                   + b"".join(bytes([i, 0x00]) for i in ids)
+                   + bytes([0, 63, 0]))
+    return b"\xff\xd8" + dqt + sof + dht + dri + sos + body + b"\xff\xd9"
+
+
+def _jpg_ycbcr(rgb):
+    """JFIF RGB→YCbCr planes of an H×W×3 image."""
+    import numpy as np
+
+    rgb = np.asarray(rgb, dtype="f8")
+    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
+    y = 0.299 * r + 0.587 * g + 0.114 * b
+    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
+    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
+    return y, cb, cr
 
 
 def jpeg_gray_encode(img, restart_interval: int = 0,
@@ -1310,354 +1156,41 @@ def jpeg_gray_encode(img, restart_interval: int = 0,
     reset + byte realignment)."""
     import numpy as np
 
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
     img = np.asarray(img, dtype="f8")
     h, w = img.shape
-    bh, bw = (h + 7) // 8, (w + 7) // 8
-    padded = np.zeros((bh * 8, bw * 8))
-    padded[:h, :w] = img
-    padded[h:, :w] = img[h - 1 : h, :]  # edge replicate
-    padded[:, w:] = padded[:, w - 1 : w]
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q  # K.1 table is given in zigzag order
-    q = q.reshape(8, 8)
-    if precision == 12:
-        dc_bits, dc_vals = _JPG12_DC_BITS, _JPG12_DC_VALS
-        ac_bits, ac_vals = _JPG12_AC_BITS, _JPG12_AC_VALS
-    else:
-        dc_bits, dc_vals = _JPG_DC_BITS, _JPG_DC_VALS
-        ac_bits, ac_vals = _JPG_AC_BITS, _JPG_AC_VALS
-    dc_codes = _jpg_codes(dc_bits, dc_vals)
-    ac_codes = _jpg_codes(ac_bits, ac_vals)
-    bwr = _JpgBitWriter()
-    pred = 0
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
-
-    mcu = 0
-    rst = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                bwr.marker(0xD0 + rst)
-                rst = (rst + 1) & 7
-                pred = 0
-            mcu += 1
-            blk = (padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                   - float(1 << (precision - 1)))
-            coef = c @ blk @ c.T
-            quant = np.rint(coef / q).astype("i8")
-            zz = quant.reshape(64)[_JPG_ZZ]
-            diff = int(zz[0]) - pred
-            pred = int(zz[0])
-            v, t = mag(diff)
-            bwr.write(*dc_codes[t])
-            if t:
-                bwr.write(v & ((1 << t) - 1), t)
-            run = 0
-            last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-            for k in range(1, last_nz + 1):
-                if zz[k] == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    bwr.write(*ac_codes[0xF0])  # ZRL
-                    run -= 16
-                v, t = mag(int(zz[k]))
-                bwr.write(*ac_codes[(run << 4) | t])
-                bwr.write(v & ((1 << t) - 1), t)
-                run = 0
-            if last_nz < 63:
-                bwr.write(*ac_codes[0x00])  # EOB
-    body = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    sof = seg(0xC0 if precision == 8 else 0xC1,
-              bytes([precision]) + h.to_bytes(2, "big")
-              + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals)) \
-        + seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    dri = seg(0xDD, restart_interval.to_bytes(2, "big")) \
-        if restart_interval else b""
-    sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + dri + sos + body + b"\xff\xd9"
+    return _jpg_sequential([(img, 1, 1)], h, w, precision, restart_interval)
 
 
 def jpeg_color_encode(rgb) -> bytes:
     """Baseline 4:4:4 color JPEG encoder: JFIF RGB→YCbCr, three interleaved
     components sharing the K.1 quantization and K.3 luminance Huffman
     tables (selector 0 for all — legal and round-trip-simple)."""
-    import numpy as np
-
-    rgb = np.asarray(rgb, dtype="f8")
-    h, w, _ = rgb.shape
-    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    planes = [y, cb, cr]
-
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
-    bh, bw = (h + 7) // 8, (w + 7) // 8
-    padded = []
-    for pl in planes:
-        p = np.zeros((bh * 8, bw * 8))
-        p[:h, :w] = pl
-        p[h:, :w] = pl[h - 1 : h, :]
-        p[:, w:] = p[:, w - 1 : w]
-        padded.append(p)
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q
-    q = q.reshape(8, 8)
-    dc_codes = _jpg_codes(_JPG_DC_BITS, _JPG_DC_VALS)
-    ac_codes = _jpg_codes(_JPG_AC_BITS, _JPG_AC_VALS)
-    bwr = _JpgBitWriter()
-    preds = [0, 0, 0]
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
-
-    for by in range(bh):
-        for bx in range(bw):
-            for ci in range(3):  # interleaved MCU, 4:4:4
-                blk = padded[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-                quant = np.rint((c @ blk @ c.T) / q).astype("i8")
-                zz = quant.reshape(64)[_JPG_ZZ]
-                diff = int(zz[0]) - preds[ci]
-                preds[ci] = int(zz[0])
-                v, t = mag(diff)
-                bwr.write(*dc_codes[t])
-                if t:
-                    bwr.write(v & ((1 << t) - 1), t)
-                run = 0
-                last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-                for k in range(1, last_nz + 1):
-                    if zz[k] == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        bwr.write(*ac_codes[0xF0])
-                        run -= 16
-                    v, t = mag(int(zz[k]))
-                    bwr.write(*ac_codes[(run << 4) | t])
-                    bwr.write(v & ((1 << t) - 1), t)
-                    run = 0
-                if last_nz < 63:
-                    bwr.write(*ac_codes[0x00])
-    body = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    sof = seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(_JPG_DC_BITS) + bytes(_JPG_DC_VALS)) \
-        + seg(0xC4, bytes([0x10]) + bytes(_JPG_AC_BITS) + bytes(_JPG_AC_VALS))
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + body + b"\xff\xd9"
+    y, cb, cr = _jpg_ycbcr(rgb)
+    h, w = y.shape
+    return _jpg_sequential([(y, 1, 1), (cb, 1, 1), (cr, 1, 1)], h, w)
 
 
 def jpeg_420_encode(rgb) -> bytes:
     """Baseline 4:2:0 color JPEG encoder (the common camera/scanner shape):
     16×16 MCUs of 4 luma blocks + box-averaged Cb/Cr."""
-    import numpy as np
-
-    rgb = np.asarray(rgb, dtype="f8")
-    h, w, _ = rgb.shape
-    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    mh, mw = (h + 15) // 16, (w + 15) // 16
-
-    def pad(pl, ph, pw):
-        p = np.zeros((ph, pw))
-        p[: pl.shape[0], : pl.shape[1]] = pl
-        p[pl.shape[0]:, : pl.shape[1]] = pl[-1:, :]
-        p[:, pl.shape[1]:] = p[:, pl.shape[1] - 1 : pl.shape[1]]
-        return p
-
-    yp = pad(y, mh * 16, mw * 16)
-    # 2x2 box-average the chroma planes, then pad to the chroma grid
-    cb2 = cb[: (h // 2) * 2, : (w // 2) * 2].reshape(
-        h // 2, 2, w // 2, 2).mean(axis=(1, 3)) if h >= 2 and w >= 2 else cb
-    cr2 = cr[: (h // 2) * 2, : (w // 2) * 2].reshape(
-        h // 2, 2, w // 2, 2).mean(axis=(1, 3)) if h >= 2 and w >= 2 else cr
-    cbp = pad(cb2, mh * 8, mw * 8)
-    crp = pad(cr2, mh * 8, mw * 8)
-
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q
-    q = q.reshape(8, 8)
-    dc_codes = _jpg_codes(_JPG_DC_BITS, _JPG_DC_VALS)
-    ac_codes = _jpg_codes(_JPG_AC_BITS, _JPG_AC_VALS)
-    bwr = _JpgBitWriter()
-    preds = [0, 0, 0]
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
-
-    def put_block(plane, py, px, ci):
-        blk = plane[py : py + 8, px : px + 8] - 128.0
-        quant = np.rint((c @ blk @ c.T) / q).astype("i8")
-        zz = quant.reshape(64)[_JPG_ZZ]
-        diff = int(zz[0]) - preds[ci]
-        preds[ci] = int(zz[0])
-        v, t = mag(diff)
-        bwr.write(*dc_codes[t])
-        if t:
-            bwr.write(v & ((1 << t) - 1), t)
-        run = 0
-        last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-        for k in range(1, last_nz + 1):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                bwr.write(*ac_codes[0xF0])
-                run -= 16
-            v, t = mag(int(zz[k]))
-            bwr.write(*ac_codes[(run << 4) | t])
-            bwr.write(v & ((1 << t) - 1), t)
-            run = 0
-        if last_nz < 63:
-            bwr.write(*ac_codes[0x00])
-
-    for my in range(mh):
-        for mx in range(mw):
-            for sub in range(4):
-                put_block(yp, my * 16 + (sub // 2) * 8,
-                          mx * 16 + (sub % 2) * 8, 0)
-            put_block(cbp, my * 8, mx * 8, 1)
-            put_block(crp, my * 8, mx * 8, 2)
-    body = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    sof = seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([3, 1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(_JPG_DC_BITS) + bytes(_JPG_DC_VALS)) \
-        + seg(0xC4, bytes([0x10]) + bytes(_JPG_AC_BITS) + bytes(_JPG_AC_VALS))
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + body + b"\xff\xd9"
+    y, cb, cr = _jpg_ycbcr(rgb)
+    h, w = y.shape
+    if h >= 2 and w >= 2:  # 2x2 box-average the chroma planes
+        cb, cr = (p[: (h // 2) * 2, : (w // 2) * 2].reshape(
+            h // 2, 2, w // 2, 2).mean(axis=(1, 3)) for p in (cb, cr))
+    return _jpg_sequential([(y, 2, 2), (cb, 1, 1), (cr, 1, 1)], h, w)
 
 
 def jpeg_411_encode(rgb) -> bytes:
     """Baseline 4:1:1 color JPEG encoder (Y h=4,v=1; Cb/Cr 1,1 — the DV/
     camera shape the reference's Go image/jpeg also decodes): 32×8 MCUs
     of 4 horizontal luma blocks + 4×1 box-averaged chroma."""
-    import numpy as np
-
-    rgb = np.asarray(rgb, dtype="f8")
-    h, w, _ = rgb.shape
-    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    mh, mw = (h + 7) // 8, (w + 31) // 32
-
-    def pad(pl, ph, pw):
-        p = np.zeros((ph, pw))
-        p[: pl.shape[0], : pl.shape[1]] = pl
-        p[pl.shape[0]:, : pl.shape[1]] = pl[-1:, :]
-        p[:, pl.shape[1]:] = p[:, pl.shape[1] - 1 : pl.shape[1]]
-        return p
-
-    yp = pad(y, mh * 8, mw * 32)
-    w4 = (w // 4) * 4
-    cb4 = cb[:, :w4].reshape(h, w // 4, 4).mean(axis=2) if w >= 4 else cb
-    cr4 = cr[:, :w4].reshape(h, w // 4, 4).mean(axis=2) if w >= 4 else cr
-    cbp = pad(cb4, mh * 8, mw * 8)
-    crp = pad(cr4, mh * 8, mw * 8)
-
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q
-    q = q.reshape(8, 8)
-    dc_codes = _jpg_codes(_JPG_DC_BITS, _JPG_DC_VALS)
-    ac_codes = _jpg_codes(_JPG_AC_BITS, _JPG_AC_VALS)
-    bwr = _JpgBitWriter()
-    preds = [0, 0, 0]
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
-
-    def put_block(plane, py, px, ci):
-        blk = plane[py : py + 8, px : px + 8] - 128.0
-        quant = np.rint((c @ blk @ c.T) / q).astype("i8")
-        zz = quant.reshape(64)[_JPG_ZZ]
-        diff = int(zz[0]) - preds[ci]
-        preds[ci] = int(zz[0])
-        v, t = mag(diff)
-        bwr.write(*dc_codes[t])
-        if t:
-            bwr.write(v & ((1 << t) - 1), t)
-        run = 0
-        last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-        for k in range(1, last_nz + 1):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                bwr.write(*ac_codes[0xF0])
-                run -= 16
-            v, t = mag(int(zz[k]))
-            bwr.write(*ac_codes[(run << 4) | t])
-            bwr.write(v & ((1 << t) - 1), t)
-            run = 0
-        if last_nz < 63:
-            bwr.write(*ac_codes[0x00])
-
-    for my in range(mh):
-        for mx in range(mw):
-            for sub in range(4):
-                put_block(yp, my * 8, mx * 32 + sub * 8, 0)
-            put_block(cbp, my * 8, mx * 8, 1)
-            put_block(crp, my * 8, mx * 8, 2)
-    body = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    sof = seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([3, 1, 0x41, 0, 2, 0x11, 0, 3, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(_JPG_DC_BITS) + bytes(_JPG_DC_VALS)) \
-        + seg(0xC4, bytes([0x10]) + bytes(_JPG_AC_BITS) + bytes(_JPG_AC_VALS))
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + body + b"\xff\xd9"
+    y, cb, cr = _jpg_ycbcr(rgb)
+    h, w = y.shape
+    if w >= 4:
+        cb, cr = (p[:, : (w // 4) * 4].reshape(h, w // 4, 4).mean(axis=2)
+                  for p in (cb, cr))
+    return _jpg_sequential([(y, 4, 1), (cb, 1, 1), (cr, 1, 1)], h, w)
 
 
 # lossless categories reach 16 (the special diff=32768 symbol carries no
@@ -1677,11 +1210,6 @@ def jpeg_lossless_encode(img, precision: int = 8,
     codes = _jpg_codes(_JPGL_DC_BITS, _JPGL_DC_VALS)
     bwr = _JpgBitWriter()
     default = 1 << (precision - 1)
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
-
     for y in range(h):
         for x in range(w):
             if y == 0 and x == 0:
@@ -1702,21 +1230,16 @@ def jpeg_lossless_encode(img, precision: int = 8,
                 bwr.write(*codes[16])
                 continue
             signed = d - 65536 if d > 32768 else d
-            v, t = mag(signed)
+            v, t = _jpg_mag(signed)
             bwr.write(*codes[t])
             if t:
                 bwr.write(v & ((1 << t) - 1), t)
     body = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    sof = seg(0xC3, bytes([precision]) + h.to_bytes(2, "big")
-              + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(_JPGL_DC_BITS)
-              + bytes(_JPGL_DC_VALS))
-    sos = seg(0xDA, bytes([1, 1, 0x00, predictor, 0, 0x00]))
+    sof = _jpg_seg(0xC3, bytes([precision]) + h.to_bytes(2, "big")
+                   + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0]))
+    dht = _jpg_seg(0xC4, bytes([0x00]) + bytes(_JPGL_DC_BITS)
+                   + bytes(_JPGL_DC_VALS))
+    sos = _jpg_seg(0xDA, bytes([1, 1, 0x00, predictor, 0, 0x00]))
     return b"\xff\xd8" + sof + dht + sos + body + b"\xff\xd9"
 
 
@@ -1729,31 +1252,12 @@ def jpeg_progressive_encode(img) -> bytes:
     independent round-trip oracle for pdf/jpeg.py's progressive path."""
     import numpy as np
 
-    c = np.zeros((8, 8))
-    for k in range(8):
-        for n in range(8):
-            c[k, n] = np.cos(np.pi * (2 * n + 1) * k / 16.0) * (
-                np.sqrt(0.125) if k == 0 else 0.5)
     img = np.asarray(img, dtype="f8")
     h, w = img.shape
     bh, bw = (h + 7) // 8, (w + 7) // 8
-    padded = np.zeros((bh * 8, bw * 8))
-    padded[:h, :w] = img
-    padded[h:, :w] = img[h - 1 : h, :]
-    padded[:, w:] = padded[:, w - 1 : w]
-    q = np.zeros(64)
-    q[_JPG_ZZ] = _JPG_Q
-    q = q.reshape(8, 8)
-    blocks: list[list[int]] = []
-    for by in range(bh):
-        for bx in range(bw):
-            blk = padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-            quant = np.rint((c @ blk @ c.T) / q).astype("i8")
-            blocks.append([int(v) for v in quant.reshape(64)[_JPG_ZZ]])
-
-    def mag(v: int) -> tuple[int, int]:
-        t = abs(v).bit_length()
-        return (v if v >= 0 else v + (1 << t) - 1, t)
+    padded = _jpg_pad(img, bh * 8, bw * 8)
+    blocks = [_jpg_block(padded, by * 8, bx * 8, 128.0)
+              for by in range(bh) for bx in range(bw)]
 
     def flat_table(symbols):
         """Canonical table giving every symbol the same code length L with
@@ -1772,12 +1276,27 @@ def jpeg_progressive_encode(img) -> bytes:
         ev = []
         sym = lambda s: ev.append(("sym", s))
         put = lambda v, n: ev.append(("bits", v & ((1 << n) - 1), n))
+        eobrun = 0
+        pend: list[int] = []  # AC refinement bits riding the EOB run
+
+        def flush():
+            nonlocal eobrun, pend
+            if eobrun:
+                r = eobrun.bit_length() - 1
+                sym(r << 4)
+                if r:
+                    put(eobrun - (1 << r), r)
+                for b in pend:
+                    put(b, 1)
+                eobrun = 0
+                pend = []
+
         if ss == 0 and ah == 0:  # DC first
             pred = 0
             for zz in blocks:
                 diff = (zz[0] >> al) - pred
                 pred = zz[0] >> al
-                v, t = mag(diff)
+                v, t = _jpg_mag(diff)
                 sym(t)
                 if t:
                     put(v, t)
@@ -1785,17 +1304,6 @@ def jpeg_progressive_encode(img) -> bytes:
             for zz in blocks:
                 put(zz[0] >> al, 1)
         elif ah == 0:  # AC first with EOB-run accumulation
-            eobrun = 0
-
-            def flush():
-                nonlocal eobrun
-                if eobrun:
-                    r = eobrun.bit_length() - 1
-                    sym(r << 4)
-                    if r:
-                        put(eobrun - (1 << r), r)
-                    eobrun = 0
-
             for zz in blocks:
                 vals = [(0 if zz[k] >= 0 else 1,
                          (abs(zz[k]) >> al)) for k in range(ss, se + 1)]
@@ -1816,7 +1324,7 @@ def jpeg_progressive_encode(img) -> bytes:
                     while run > 15:
                         sym(0xF0)
                         run -= 16
-                    v, t = mag(-m if sign else m)
+                    v, t = _jpg_mag(-m if sign else m)
                     sym((run << 4) | t)
                     put(v, t)
                     run = 0
@@ -1824,21 +1332,6 @@ def jpeg_progressive_encode(img) -> bytes:
                     eobrun = 1
             flush()
         else:  # AC refinement (G.1.2.3 dual of the decoder)
-            eobrun = 0
-            pend: list[int] = []
-
-            def flush():
-                nonlocal eobrun, pend
-                if eobrun:
-                    r = eobrun.bit_length() - 1
-                    sym(r << 4)
-                    if r:
-                        put(eobrun - (1 << r), r)
-                    for b in pend:
-                        put(b, 1)
-                    eobrun = 0
-                    pend = []
-
             for zz in blocks:
                 t_of = [abs(zz[k]) >> al for k in range(ss, se + 1)]
                 if 1 not in t_of:
@@ -1889,13 +1382,9 @@ def jpeg_progressive_encode(img) -> bytes:
             flush()
         return ev
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
-            + payload
-
-    out = b"\xff\xd8" + seg(0xDB, bytes([0]) + bytes(_JPG_Q))
-    out += seg(0xC2, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-               + bytes([1, 1, 0x11, 0]))
+    out = b"\xff\xd8" + _jpg_seg(0xDB, bytes([0]) + bytes(_JPG_Q))
+    out += _jpg_seg(0xC2, bytes([8]) + h.to_bytes(2, "big")
+                    + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0]))
     for ss, se, ah, al in ((0, 0, 0, 1), (1, 5, 0, 1), (6, 63, 0, 1),
                            (0, 0, 1, 0), (1, 63, 1, 0)):
         ev = scan_events(ss, se, ah, al)
@@ -1905,14 +1394,14 @@ def jpeg_progressive_encode(img) -> bytes:
             bits, vals = flat_table(syms)
             codes = _jpg_codes(bits, vals)
             tc = 0 if ss == 0 else 1
-            out += seg(0xC4, bytes([(tc << 4) | 0]) + bytes(bits)
-                       + bytes(vals))
+            out += _jpg_seg(0xC4, bytes([(tc << 4) | 0]) + bytes(bits)
+                            + bytes(vals))
         for e in ev:
             if e[0] == "sym":
                 bwr.write(*codes[e[1]])
             else:
                 bwr.write(e[1], e[2])
-        out += seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
+        out += _jpg_seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
         out += bwr.flush()
     return out + b"\xff\xd9"
 
@@ -2034,16 +1523,6 @@ _JB2_REF_T1 = [("r", 0, -1), ("r", -1, 0), ("r", 0, 0), ("r", 1, 0),
 _JB2_REF_TPCTX = {0: 0x0100, 1: 0x0080}
 
 
-def _jb2_refine_body(target, ref, w: int, h: int, template: int = 0,
-                     tpgron: bool = False) -> bytes:
-    """MQ-encode `target` as a refinement of `ref` (nominal AT, dx=dy=0,
-    same dimensions) into a fresh encoder."""
-    enc = _MQEncoder()
-    _jb2_refine_into(enc, {}, target, ref, w, h, w, h, 0, 0, template,
-                     tpgron)
-    return enc.flush()
-
-
 def _jb2_refine_into(enc: "_MQEncoder", contexts: dict, target, ref,
                      w: int, h: int, rw: int, rh: int, dx: int, dy: int,
                      template: int = 0, tpgron: bool = False) -> None:
@@ -2092,32 +1571,345 @@ def _jb2_refine_into(enc: "_MQEncoder", contexts: dict, target, ref,
             enc.encode(cx, cpx(x, y))
 
 
+# --- JBIG2 symbol dictionaries and text regions ------------------------------
+# One writer per step: the arithmetic height-class loop, the arithmetic and
+# the Huffman text-region instance loops, the composed page.
+
+
+def _jb2_symcodelen(n_syms: int) -> int:
+    """SBSYMCODELEN: bits of a symbol ID over n_syms symbols (at least 1)."""
+    return max(1, (n_syms - 1).bit_length())
+
+
+def _jb2_dict_order(symbols, by_width: bool = False):
+    """(caller ids in dictionary order, caller id → dictionary id): by
+    height, then by width if `by_width`, else in caller order."""
+    order = sorted(range(len(symbols)), key=lambda i: (
+        len(symbols[i]), len(symbols[i][0]) if by_width else 0))
+    return order, {i: k for k, i in enumerate(order)}
+
+
+def _jb2_height_classes(enc: "_MQEncoder", dims, code,
+                        n_export: int) -> None:
+    """Arithmetic symbol-dictionary height classes (§6.5.5): per class
+    the height delta, per symbol the width delta and `code(k)` coding the
+    k-th symbol's bitmap, an OOB width delta closing the class; then the
+    export flags (skip none, export n_export). `dims` = [(height, width)]
+    in dictionary order."""
+    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
+    hcheight = 0
+    i = 0
+    while i < len(dims):
+        h = dims[i][0]
+        _jb2_enc_int(enc, iadh, h - hcheight)
+        hcheight = h
+        symwidth = 0
+        while i < len(dims) and dims[i][0] == h:
+            _jb2_enc_int(enc, iadw, dims[i][1] - symwidth)
+            symwidth = dims[i][1]
+            code(i)
+            i += 1
+        _jb2_enc_int(enc, iadw, None)  # OOB: end of height class
+    _jb2_enc_int(enc, iaex, 0)         # skip-run 0
+    _jb2_enc_int(enc, iaex, n_export)  # export-run
+
+
+def _jb2_symbol_dict(symbols) -> bytes:
+    """Arithmetic symbol dictionary segment data (type 0: template 0,
+    nominal AT, every symbol exported) for `symbols` in dictionary order;
+    one MQ coder and GB context store code all bitmaps."""
+    enc = _MQEncoder()
+    gb_ctx: dict = {}
+    _jb2_height_classes(
+        enc, [(len(sym), len(sym[0])) for sym in symbols],
+        lambda k: _jb2_generic_into(enc, gb_ctx, symbols[k],
+                                    len(symbols[k][0])),
+        len(symbols))
+    n = len(symbols).to_bytes(4, "big")
+    return ((0).to_bytes(2, "big") + _jb2_at_bytes(_JB2_NOMINAL0) + n + n
+            + enc.flush())
+
+
+def _jb2_ts(x: int, y: int, bmp, ref_corner: int,
+            transposed: bool) -> tuple[int, int]:
+    """Encoded (T, S) of `bmp` placed with its top-left pixel at (x, y)
+    (§6.4.5): T is the corner-selected edge along y — top for TL/TR,
+    bottom row for BL/BR — or, transposed, along x — left for TL/BL,
+    right column for TR/BR; S is the other coordinate."""
+    if transposed:
+        return (x if ref_corner in (0, 1) else x + len(bmp[0]) - 1), y
+    return (y if ref_corner in (1, 3) else y + len(bmp) - 1), x
+
+
+def _jb2_text_contexts(n_syms: int) -> dict:
+    """Fresh arithmetic text-region coding state over n_syms symbols: the
+    integer contexts (IADT, IAFS, IADS, IARI, IARDW/H/X/Y), the IAID tree
+    and the GR context store."""
+    cx = {k: _jb2_int_ctx()
+          for k in ("dt", "fs", "ds", "ri", "rdw", "rdh", "rdx", "rdy")}
+    cx["codelen"] = _jb2_symcodelen(n_syms)
+    cx["id"] = [[0, 0] for _ in range(1 << (cx["codelen"] + 1))]
+    cx["gr"] = {}
+    return cx
+
+
+def _jb2_text_into(enc: "_MQEncoder", cx: dict, symbols, insts,
+                   refine: bool = False, ref_corner: int = 1,
+                   transposed: bool = False) -> None:
+    """Arithmetic text-region instances (§6.4.5, one strip per T) into
+    `enc` with the coding state `cx`. `symbols` are the dictionary's
+    bitmaps; `insts` = [(symbol id, x, y, refined bitmap | None)] where
+    (x, y) is always the TOP-LEFT pixel; ref_corner (0=BL 1=TL 2=BR 3=TR)
+    and transposed select the T/S coordinate encoding (transposed: T
+    along x, S along y, strips are columns). A strip's instances go out
+    by S, equal S in `insts` order. With `refine` (SBREFINE=1) each
+    instance carries RI, and a refined one is GRR-coded against its
+    dictionary symbol (§6.4.11)."""
+    by_row: dict[int, list] = {}
+    for sid, x, y, bmp in insts:
+        t, s = _jb2_ts(x, y, symbols[sid] if bmp is None else bmp,
+                       ref_corner, transposed)
+        by_row.setdefault(t, []).append((s, sid, bmp))
+    _jb2_enc_int(enc, cx["dt"], 0)  # STRIPT init = 0
+    stript = 0
+    firsts = 0
+    n_inst = 0
+    for t in sorted(by_row):
+        _jb2_enc_int(enc, cx["dt"], t - stript)
+        stript = t
+        first = True
+        curs = 0
+        for s, sid, bmp in sorted(by_row[t], key=lambda e: e[0]):
+            if first:
+                _jb2_enc_int(enc, cx["fs"], s - firsts)
+                firsts = s
+                first = False
+            else:
+                _jb2_enc_int(enc, cx["ds"], s - curs)
+            curs = s
+            _jb2_enc_iaid(enc, cx["id"], cx["codelen"], sid)
+            sym = symbols[sid]
+            if refine:
+                _jb2_enc_int(enc, cx["ri"], 1 if bmp is not None else 0)
+            if bmp is not None:
+                sw0, sh0 = len(sym[0]), len(sym)
+                wi, hi = len(bmp[0]), len(bmp)
+                _jb2_enc_int(enc, cx["rdw"], wi - sw0)
+                _jb2_enc_int(enc, cx["rdh"], hi - sh0)
+                _jb2_enc_int(enc, cx["rdx"], 0)
+                _jb2_enc_int(enc, cx["rdy"], 0)
+                # §6.4.11 instances add floor(RDW/2)/floor(RDH/2)
+                _jb2_refine_into(enc, cx["gr"], bmp, sym, wi, hi, sw0, sh0,
+                                 (wi - sw0) >> 1, (hi - sh0) >> 1,
+                                 template=0)
+                sym = bmp
+            curs += (len(sym) if transposed else len(sym[0])) - 1
+            n_inst += 1
+        if n_inst < len(insts):
+            _jb2_enc_int(enc, cx["ds"], None)  # end of strip
+
+
+def _jb2_instances(placements, remap, refined=None) -> list:
+    """Text-region instances [(dictionary id, x, y, refined bitmap |
+    None)] of caller placements [(caller id, x, y)], ordered by
+    dictionary id then placement, so that instances at equal S go out by
+    id."""
+    refined = refined or {}
+    return sorted(((remap[sym_id], x, y, refined.get(p_idx))
+                   for p_idx, (sym_id, x, y) in enumerate(placements)),
+                  key=lambda e: e[0])
+
+
+def _jb2_text_region(symbols, insts, cols: int, nrows: int,
+                     refine: bool = False, ref_corner: int = 1,
+                     transposed: bool = False) -> bytes:
+    """Arithmetic text region segment data (type 6; strips=1, OR) placing
+    `insts` over the dictionary `symbols` (see _jb2_text_into)."""
+    enc = _MQEncoder()
+    _jb2_text_into(enc, _jb2_text_contexts(len(symbols)), symbols, insts,
+                   refine, ref_corner, transposed)
+    # SBREFINE bit 1, REFCORNER bits 4-5, TRANSPOSED bit 6
+    flags = (((1 if refine else 0) << 1) | ((ref_corner & 3) << 4)
+             | ((1 if transposed else 0) << 6))
+    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF]) if refine else b""
+    return (_jb2_region_info(cols, nrows) + flags.to_bytes(2, "big") + rat
+            + len(insts).to_bytes(4, "big") + enc.flush())
+
+
+def _jb2_refine_chunk(bw: _JB2BitWriterMSB, gr_ctx: dict, target, ref,
+                      w: int, h: int, rw: int, rh: int, dx: int,
+                      dy: int) -> None:
+    """Huffman-side refined bitmap: BMSIZE (B.1) + a byte-aligned GRR
+    chunk from its own MQ coder, the GR context store shared."""
+    enc = _MQEncoder()
+    _jb2_refine_into(enc, gr_ctx, target, ref, w, h, rw, rh, dx, dy,
+                     template=0)
+    chunk = enc.flush()
+    _jb2_huff_put(bw, "B1", len(chunk))  # BMSIZE
+    bw.align()
+    bw.out.extend(chunk)
+
+
+def _jb2_huff_text_into(bw: _JB2BitWriterMSB, gr_ctx: dict, symbols, insts,
+                        id_len: int, strips: int = 1, refine: bool = False,
+                        ref_corner: int = 1, transposed: bool = False,
+                        rd_table: str = "B15") -> None:
+    """Huffman text-region instances (§6.4.5 Huffman branch: DT=B.11,
+    FS=B.6, DS=B.8, id_len-bit raw IDs, RI raw bit, RDW/RDH/RDX/RDY via
+    `rd_table`, refined bitmaps as BMSIZE GRR chunks sharing `gr_ctx`)
+    into `bw`. `insts` as for _jb2_text_into; T values are grouped into
+    strips of `strips` rows, a strip's instances go out by (S, CURT),
+    equal keys in `insts` order."""
+    log_strips = (strips - 1).bit_length()
+    by_strip: dict[int, list] = {}
+    for sid, x, y, bmp in insts:
+        t, s = _jb2_ts(x, y, symbols[sid] if bmp is None else bmp,
+                       ref_corner, transposed)
+        base = (t // strips) * strips
+        by_strip.setdefault(base, []).append((s, t - base, sid, bmp))
+    _jb2_huff_put(bw, "B11", 1)  # STRIPT init: stript = -strips
+    stript = -strips
+    firsts = 0
+    n_inst = 0
+    for base in sorted(by_strip):
+        _jb2_huff_put(bw, "B11", (base - stript) // strips)
+        stript = base
+        first = True
+        curs = 0
+        for s, curt, sid, bmp in sorted(by_strip[base], key=lambda e: e[:2]):
+            if first:
+                _jb2_huff_put(bw, "B6", s - firsts)
+                firsts = s
+                first = False
+            else:
+                _jb2_huff_put(bw, "B8", s - curs)
+            curs = s
+            if strips != 1:
+                bw.write(curt, log_strips)
+            bw.write(sid, id_len)  # canonical uniform-length ID code
+            sym = symbols[sid]
+            if refine:
+                bw.write(1 if bmp is not None else 0, 1)  # RI raw bit
+            if bmp is not None:
+                sw0, sh0 = len(sym[0]), len(sym)
+                wi, hi = len(bmp[0]), len(bmp)
+                _jb2_huff_put(bw, rd_table, wi - sw0)  # RDW
+                _jb2_huff_put(bw, rd_table, hi - sh0)  # RDH
+                _jb2_huff_put(bw, rd_table, 0)  # RDX
+                _jb2_huff_put(bw, rd_table, 0)  # RDY
+                # §6.4.11 instances add floor(RDW/2)/floor(RDH/2)
+                _jb2_refine_chunk(bw, gr_ctx, bmp, sym, wi, hi, sw0, sh0,
+                                  (wi - sw0) >> 1, (hi - sh0) >> 1)
+                sym = bmp
+            curs += (len(sym) if transposed else len(sym[0])) - 1
+            n_inst += 1
+        if n_inst < len(insts):
+            _jb2_huff_put(bw, "B8", None)  # OOB: end of strip
+
+
+def jbig2_text_encode(symbols: list[list[list[bool]]],
+                      placements: list[tuple[int, int, int]],
+                      cols: int, nrows: int,
+                      ref_corner: int = 1,
+                      transposed: bool = False,
+                      instance_refine: dict | None = None
+                      ) -> tuple[bytes, list[list[int]]]:
+    """Embedded JBIG2 with a SYMBOL DICTIONARY + TEXT REGION (the jbig2enc
+    shape): page info, symbol dict (arithmetic, template 0, all exported),
+    one-strip text region placing (sym_id, x, y) instances, where (x, y)
+    is always the TOP-LEFT pixel of the symbol; ref_corner (0=BL 1=TL
+    2=BR 3=TR) and transposed select the T/S coordinate encoding per
+    T.88 §6.4.5 (transposed: T along x, S along y, strips are columns).
+    ``instance_refine`` maps placement INDEX → a bitmap placed as an
+    SBREFINE=1 refinement of that instance's dictionary symbol (§6.4.11).
+    Returns (stream, composed page rows 0/1)."""
+    instance_refine = instance_refine or {}
+    # dictionary order is height-sorted: id in the TEXT REGION indexes the
+    # exported list, so remap caller ids
+    order, remap = _jb2_dict_order(symbols)
+    dsyms = [symbols[i] for i in order]
+    tr_data = _jb2_text_region(
+        dsyms, _jb2_instances(placements, remap, instance_refine), cols,
+        nrows, bool(instance_refine), ref_corner, transposed)
+    stream = _jb2_stream(cols, nrows, (0, _jb2_symbol_dict(dsyms), False),
+                         (6, tr_data, True))
+    return stream, _jb2_compose(cols, nrows, [
+        (instance_refine.get(p_idx, symbols[sym_id]), x, y)
+        for p_idx, (sym_id, x, y) in enumerate(placements)])
+
+
+def jbig2_huffman_textregion_encode(symbols: list[list[list[bool]]],
+                              placements: list[tuple[int, int, int]],
+                              cols: int, nrows: int,
+                              strips: int = 1,
+                              instance_refine: dict | None = None,
+                              ref_corner: int = 1,
+                              transposed: bool = False
+                              ) -> tuple[bytes, list[list[int]]]:
+    """Embedded JBIG2 with an arithmetic SYMBOL DICTIONARY + SBHUFF=1
+    Huffman TEXT REGION (T.88 §6.4 Huffman branch, §7.4.3.1.7 symbol ID
+    runcodes). Standard table selections FS=B.6, DS=B.8, DT=B.11,
+    RDW/RDH/RDX/RDY=B.15, RSIZE=B.1; (x, y) is always the TOP-LEFT
+    pixel — ref_corner (0=BL 1=TL 2=BR 3=TR) and transposed select the
+    T/S encoding per §6.4.5 (transposed: T along x, S along y).
+    ``instance_refine`` maps placement index → refined bitmap (RI=1:
+    byte-aligned BMSIZE arithmetic GRR chunks sharing one GR context
+    store). Returns (stream, composed page rows 0/1)."""
+    instance_refine = instance_refine or {}
+    order, remap = _jb2_dict_order(symbols)
+    dsyms = [symbols[i] for i in order]
+
+    refine = bool(instance_refine)
+    log_strips = max(0, (strips - 1).bit_length())
+    assert strips == 1 << log_strips
+    bw = _JB2BitWriterMSB()
+    # §7.4.3.1.7: uniform symbol ID code length L → runcode table with a
+    # single 1-bit code for runcode L, emitted once per symbol
+    sym_len = _jb2_symcodelen(len(symbols))
+    for rc in range(35):
+        bw.write(1 if rc == sym_len else 0, 4)
+    for _ in range(len(symbols)):
+        bw.write(0, 1)  # the single runcode's canonical code is '0'
+    bw.align()
+    _jb2_huff_text_into(bw, {}, dsyms,
+                        _jb2_instances(placements, remap, instance_refine),
+                        sym_len, strips, refine, ref_corner, transposed)
+    tr_body = bw.flush()
+
+    # SBHUFF=1, SBREFINE bit 1, LOGSBSTRIPS bits 2-3, REFCORNER bits 4-5,
+    # TRANSPOSED bit 6
+    tr_flags = (1 | ((1 if refine else 0) << 1) | (log_strips << 2)
+                | ((ref_corner & 3) << 4)
+                | ((1 if transposed else 0) << 6))
+    # huffman flags: FS=B6(0), DS=B8(0), DT=B11(0), RD*=B15(1), RSIZE=B1(0)
+    hflags = (1 << 6) | (1 << 8) | (1 << 10) | (1 << 12)
+    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF]) if refine else b""
+    tr_data = (_jb2_region_info(cols, nrows) + tr_flags.to_bytes(2, "big")
+               + hflags.to_bytes(2, "big") + rat
+               + len(placements).to_bytes(4, "big") + tr_body)
+    stream = _jb2_stream(cols, nrows, (0, _jb2_symbol_dict(dsyms), False),
+                         (6, tr_data, True))
+    return stream, _jb2_compose(cols, nrows, [
+        (instance_refine.get(p_idx, symbols[sym_id]), x, y)
+        for p_idx, (sym_id, x, y) in enumerate(placements)])
+
+
 def jbig2_refinement_encode(base_rows, target_rows, cols: int,
                             template: int = 0, tpgron: bool = False
                             ) -> tuple[bytes, list]:
     """Embedded JBIG2: page info + generic region (base) + immediate
     refinement region (type 42) replacing it with `target_rows`."""
     h = len(base_rows)
-    page_info = (cols.to_bytes(4, "big") + h.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    region_info = (cols.to_bytes(4, "big") + h.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    gen_data = (region_info + bytes([0x00])
-                + bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE,
-                         0x100 - 2, 0xFE])
-                + _jb2_generic_body(base_rows, cols))
+    enc = _MQEncoder()  # nominal AT, dx=dy=0, same dimensions
+    _jb2_refine_into(enc, {}, target_rows, base_rows, cols, h, cols, h,
+                     0, 0, template, tpgron)
     rflags = (1 if template else 0) | (2 if tpgron else 0)
-    rdata = region_info + bytes([rflags])
+    rdata = _jb2_region_info(cols, h) + bytes([rflags])
     if template == 0:
         rdata += bytes([0xFF, 0xFF, 0xFF, 0xFF])  # GRAT nominal (-1,-1) x2
-    rdata += _jb2_refine_body(target_rows, base_rows, cols, h,
-                              template, tpgron)
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 38, gen_data)
-              + _jb2_segment(3, 42, rdata)
-              + _jb2_segment(4, 49, b""))
+    stream = _jb2_stream(
+        cols, h, (38, _jb2_generic_region(base_rows, cols), False),
+        (42, rdata + enc.flush(), False))
     want = [[1 if v else 0 for v in r] for r in target_rows]
     return stream, want
 
@@ -2130,34 +1922,27 @@ def jbig2_huffman_text_encode(symbols, placements, cols: int, nrows: int,
     MMR) + an arithmetic text region placing (sym_id, x, y) instances at
     their top-left. Returns (stream, composed page rows)."""
     dw_tbl = _JB2_CUSTOM_DW if custom_dw else "B2"
-    order = sorted(range(len(symbols)),
-                   key=lambda i: (len(symbols[i]), len(symbols[i][0])))
+    order, remap = _jb2_dict_order(symbols, by_width=True)
+    dsyms = [symbols[i] for i in order]
     bw = _JB2BitWriterMSB()
     hcheight = 0
     i = 0
-    while i < len(order):
-        hgt = len(symbols[order[i]])
+    while i < len(dsyms):
+        hgt = len(dsyms[i])
         _jb2_huff_put(bw, "B4", hgt - hcheight)
         hcheight = hgt
         symwidth = 0
-        cls: list[int] = []
-        while i < len(order) and len(symbols[order[i]]) == hgt:
-            wd = len(symbols[order[i]][0])
+        placed = []  # collective bitmap: class symbols left-to-right
+        totwidth = 0
+        while i < len(dsyms) and len(dsyms[i]) == hgt:
+            wd = len(dsyms[i][0])
             _jb2_huff_put(bw, dw_tbl, wd - symwidth)
             symwidth = wd
-            cls.append(order[i])
+            placed.append((dsyms[i], totwidth, 0))
+            totwidth += wd
             i += 1
         _jb2_huff_put(bw, dw_tbl, None)  # OOB: end of height class
-        # collective bitmap: class symbols concatenated left-to-right
-        totwidth = sum(len(symbols[k][0]) for k in cls)
-        coll = [[False] * totwidth for _ in range(hgt)]
-        x0 = 0
-        for k in cls:
-            sym = symbols[k]
-            for yy in range(hgt):
-                for xx in range(len(sym[0])):
-                    coll[yy][x0 + xx] = bool(sym[yy][xx])
-            x0 += len(sym[0])
+        coll = _jb2_compose(totwidth, hgt, placed)
         if mmr:
             body = ccitt_g4_encode(coll, totwidth)
             _jb2_huff_put(bw, "B1", len(body))
@@ -2181,71 +1966,16 @@ def jbig2_huffman_text_encode(symbols, placements, cols: int, nrows: int,
     sd_data = sd_flags.to_bytes(2, "big") \
         + len(symbols).to_bytes(4, "big") + len(symbols).to_bytes(4, "big") \
         + bw.flush()
-    remap = {orig: k for k, orig in enumerate(order)}
-
-    # arithmetic text region (same shape as jbig2_text_encode, TL corner)
-    n_syms = len(symbols)
-    symcodelen = max(1, (n_syms - 1).bit_length() if n_syms > 1 else 1)
-    enc2 = _MQEncoder()
-    iadt, iafs, iads = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_cx = [[0, 0] for _ in range(1 << (symcodelen + 1))]
-    by_row: dict[int, list[tuple[int, int]]] = {}
-    for sym_id, x, y in placements:
-        by_row.setdefault(y, []).append((x, remap[sym_id]))
-    _jb2_enc_int(enc2, iadt, 0)
-    stript = 0
-    firsts = 0
-    n_inst = 0
-    total = len(placements)
-    for y in sorted(by_row):
-        _jb2_enc_int(enc2, iadt, y - stript)
-        stript = y
-        first = True
-        curs = 0
-        for x, sid in sorted(by_row[y]):
-            if first:
-                _jb2_enc_int(enc2, iafs, x - firsts)
-                firsts = x
-                curs = x
-                first = False
-            else:
-                _jb2_enc_int(enc2, iads, x - curs)
-                curs = x
-            _jb2_enc_iaid(enc2, iaid_cx, symcodelen, sid)
-            curs += len(symbols[order[sid]][0]) - 1
-            n_inst += 1
-        if n_inst < total:
-            _jb2_enc_int(enc2, iads, None)
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    tr_flags = 1 << 4  # TL corner, strips=1, untransposed, OR
-    tr_data = (region_info + tr_flags.to_bytes(2, "big")
-               + total.to_bytes(4, "big") + enc2.flush())
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    if custom_dw:
-        stream = (_jb2_segment(1, 48, page_info)
-                  + _jb2_segment(2, 53, _jb2_custom_dw_segment())
-                  + _jb2_segment_refs(3, 0, [2], sd_data)
-                  + _jb2_segment_refs(4, 6, [3], tr_data)
-                  + _jb2_segment(5, 49, b""))
+    # arithmetic text region (as jbig2_text_encode, TL corner)
+    tr_data = _jb2_text_region(dsyms, _jb2_instances(placements, remap),
+                               cols, nrows)
+    if custom_dw:  # the dictionary refers to the DW table segment
+        segs = [(53, _jb2_custom_dw_segment(), False), (0, sd_data, True)]
     else:
-        stream = (_jb2_segment(1, 48, page_info)
-                  + _jb2_segment(2, 0, sd_data)
-                  + _jb2_segment_refs(3, 6, [2], tr_data)
-                  + _jb2_segment(4, 49, b""))
-    page = [[0] * cols for _ in range(nrows)]
-    for sym_id, x, y in placements:
-        sym = symbols[sym_id]
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
+        segs = [(0, sd_data, False)]
+    stream = _jb2_stream(cols, nrows, *segs, (6, tr_data, True))
+    return stream, _jb2_compose(cols, nrows, [
+        (symbols[sym_id], x, y) for sym_id, x, y in placements])
 
 
 def jbig2_halftone_encode(gray, patterns, mmr: bool = False,
@@ -2266,9 +1996,10 @@ def jbig2_halftone_encode(gray, patterns, mmr: bool = False,
     coll_w = (graymax + 1) * s
     coll = [[bool(patterns[i][y][x]) for i in range(graymax + 1)
              for x in range(s)] for y in range(s)]
-    pd_body = _jb2_generic_body(coll, coll_w,
-                                at=[(-s, 0), (-3, -1), (2, -2), (-2, -2)])
-    pd_data = (bytes([0, s, s]) + graymax.to_bytes(4, "big") + pd_body)
+    enc = _MQEncoder()
+    _jb2_generic_into(enc, {}, coll, coll_w,
+                      at=[(-s, 0), (-3, -1), (2, -2), (-2, -2)])
+    pd_data = (bytes([0, s, s]) + graymax.to_bytes(4, "big") + enc.flush())
 
     bpp = max(1, graymax.bit_length())
     hgx = -skip_cols * s
@@ -2295,35 +2026,138 @@ def jbig2_halftone_encode(gray, patterns, mmr: bool = False,
             _jb2_generic_into(enc, ctx, plane_bits(j), hgw,
                               skip=skipmap)
         body = enc.flush()
-    region_info = (rw.to_bytes(4, "big") + rh.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
     ht_flags = (1 if mmr else 0) | ((1 if skip_cols else 0) << 3)
-    ht_data = (region_info + bytes([ht_flags])
+    ht_data = (_jb2_region_info(rw, rh) + bytes([ht_flags])
                + hgw.to_bytes(4, "big") + hgh.to_bytes(4, "big")
                + ((hgx << 8) & 0xFFFFFFFF).to_bytes(4, "big")  # 1/256 fp
                + (0).to_bytes(4, "big")
                + (s << 8).to_bytes(2, "big") + (0).to_bytes(2, "big")
                + body)
-    page_info = (rw.to_bytes(4, "big") + rh.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 16, pd_data)
-              + _jb2_segment_refs(3, 22, [2], ht_data)
-              + _jb2_segment(4, 49, b""))
-    page = [[0] * rw for _ in range(rh)]
-    for mg in range(hgh):
-        for ng in range(hgw):
-            if skipmap is not None and skipmap[mg][ng]:
-                continue  # cell wholly off-region: decodes as gray 0
-            pat = patterns[gray[mg][ng]]
-            for yy in range(s):
-                for xx in range(s):
-                    px = hgx + ng * s + xx
-                    if pat[yy][xx] and 0 <= px < rw:
-                        page[mg * s + yy][px] = 1
-    return stream, page
+    stream = _jb2_stream(rw, rh, (16, pd_data, False), (22, ht_data, True))
+    # a cell wholly off-region (skip bitmap) decodes as gray 0: not drawn
+    return stream, _jb2_compose(rw, rh, [
+        (patterns[gray[mg][ng]], hgx + ng * s, mg * s)
+        for mg in range(hgh) for ng in range(hgw)
+        if skipmap is None or not skipmap[mg][ng]])
+
+
+def _jb2_refagg_encode(base_symbols, variants, placements, cols: int,
+                       nrows: int, aggregates, refinement_dict
+                       ) -> tuple[bytes, list]:
+    """The SDREFAGG=1 stream shared by both refinement-dictionary codings:
+    an arithmetic base dictionary; the refinement dictionary importing it,
+    whose segment data `refinement_dict(base, base_remap, entries,
+    n_total)` writes for the new `entries` = [("var", base_id, bitmap) |
+    ("agg", instances, canvas)] in dictionary order; an arithmetic text
+    region over the combined exports (base, then new entries)."""
+    aggregates = aggregates or []
+    order, base_remap = _jb2_dict_order(base_symbols, by_width=True)
+    base = [base_symbols[i] for i in order]
+    # new entries: refine-1 variants and (optionally) REFAGGNINST>1
+    # aggregates, class-sorted together by (height, width)
+    entries = [("var", bid, bmp) for bid, bmp in variants] + [
+        ("agg", insts, _jb2_compose(cw, ch, [(bmp, ax, ay)
+                                             for _b, ax, ay, bmp in insts]))
+        for cw, ch, insts in aggregates]
+    new_order, new_remap = _jb2_dict_order([e[2] for e in entries],
+                                           by_width=True)
+    dict_entries = [entries[k] for k in new_order]
+    n_in = len(base_symbols)
+    n_total = n_in + len(entries)
+    sd2 = refinement_dict(base, base_remap, dict_entries, n_total)
+    remap = dict(base_remap)
+    remap.update({n_in + j: n_in + k for j, k in new_remap.items()})
+    tr_data = _jb2_text_region(base + [e[2] for e in dict_entries],
+                               _jb2_instances(placements, remap), cols, nrows)
+    stream = _jb2_stream(cols, nrows, (0, _jb2_symbol_dict(base), False),
+                         (0, sd2, True), (6, tr_data, True))
+    all_syms = list(base_symbols) + [e[2] for e in entries]
+    return stream, _jb2_compose(cols, nrows, [
+        (all_syms[sym_id], x, y) for sym_id, x, y in placements])
+
+
+def _jb2_refagg_arith_dict(base, base_remap, entries, n_total) -> bytes:
+    """Arithmetic SDREFAGG=1 dictionary data: a variant is IAAI(1) +
+    IAID(base) + IARDX/IARDY(0) + GRR refinement of that base (§6.5.8.2);
+    an aggregate is IAAI(n) + a nested TL/strip-1/refined text region
+    (§6.5.8.2.1). One MQ coder; the nested regions get their OWN integer
+    stats, only the GR store + IAID tree are shared with the dictionary
+    (as the reference's decodeThroughTextRegion/setContexts do)."""
+    enc = _MQEncoder()
+    iaai, iardx, iardy = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
+    tcx = _jb2_text_contexts(n_total)
+
+    def code(k):
+        kind, what, bmp = entries[k]
+        if kind == "var":
+            rid = base_remap[what]  # index into SDINSYMS
+            ref = base[rid]
+            _jb2_enc_int(enc, iaai, 1)  # REFAGGNINST = 1
+            _jb2_enc_iaid(enc, tcx["id"], tcx["codelen"], rid)
+            _jb2_enc_int(enc, iardx, 0)
+            _jb2_enc_int(enc, iardy, 0)
+            _jb2_refine_into(enc, tcx["gr"], bmp, ref, len(bmp[0]),
+                             len(bmp), len(ref[0]), len(ref), 0, 0,
+                             template=0)
+        else:
+            _jb2_enc_int(enc, iaai, len(what))
+            _jb2_text_into(enc, tcx, base, [
+                (base_remap[bid], ax, ay, rbmp)
+                for bid, ax, ay, rbmp in what], refine=True)
+
+    _jb2_height_classes(enc, [(len(e[2]), len(e[2][0])) for e in entries],
+                        code, n_total)
+    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF])  # GRAT nominal (-1,-1) x2
+    return ((0x0002).to_bytes(2, "big") + _jb2_at_bytes(_JB2_NOMINAL0) + rat
+            + n_total.to_bytes(4, "big") + len(entries).to_bytes(4, "big")
+            + enc.flush())
+
+
+def _jb2_refagg_huffman_dict(base, base_remap, entries, n_total) -> bytes:
+    """Huffman SDREFAGG=1 dictionary data (DH via B.4, DW via B.2,
+    REFAGGNINST via B.1): a variant is a raw symcodelen-bit ID + RDX/RDY
+    via B.15 + a BMSIZE GRR chunk; an aggregate is a nested Huffman text
+    region with B.6/B.8/B.11/B.14/B.1 tables and raw-bit IDs."""
+    symcodelen = _jb2_symcodelen(n_total)
+    bw = _JB2BitWriterMSB()
+    gr_ctx: dict = {}
+    hcheight = 0
+    i = 0
+    while i < len(entries):
+        hgt = len(entries[i][2])
+        _jb2_huff_put(bw, "B4", hgt - hcheight)  # DH (B.4: ≥ 1)
+        hcheight = hgt
+        symwidth = 0
+        while i < len(entries) and len(entries[i][2]) == hgt:
+            kind, what, bmp = entries[i]
+            wd = len(bmp[0])
+            _jb2_huff_put(bw, "B2", wd - symwidth)  # DW (B.2: ≥ 0)
+            symwidth = wd
+            if kind == "var":
+                _jb2_huff_put(bw, "B1", 1)  # REFAGGNINST
+                bw.write(base_remap[what], symcodelen)  # raw ID
+                _jb2_huff_put(bw, "B15", 0)  # RDX
+                _jb2_huff_put(bw, "B15", 0)  # RDY
+                ref = base[base_remap[what]]
+                # SD refined symbols: GRREFERENCEDX = RDX directly
+                _jb2_refine_chunk(bw, gr_ctx, bmp, ref, wd, hgt, len(ref[0]),
+                                  len(ref), 0, 0)
+            else:
+                _jb2_huff_put(bw, "B1", len(what))  # REFAGGNINST > 1
+                _jb2_huff_text_into(bw, gr_ctx, base, [
+                    (base_remap[bid], ax, ay, rbmp)
+                    for bid, ax, ay, rbmp in what], symcodelen,
+                    refine=True, rd_table="B14")
+            i += 1
+        _jb2_huff_put(bw, "B2", None)  # OOB: end of height class
+    _jb2_huff_put(bw, "B1", 0)          # export skip-run
+    _jb2_huff_put(bw, "B1", n_total)    # export inputs + new
+    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF])  # GRAT nominal (−1,−1) ×2
+    # flags: SDHUFF=1, SDREFAGG=1, DH=B.4(0), DW=B.2(0), BM=B.1(0),
+    # AGG=B.1(0), SDRTEMPLATE=0
+    return ((0x0003).to_bytes(2, "big") + rat
+            + n_total.to_bytes(4, "big") + len(entries).to_bytes(4, "big")
+            + bw.flush())
 
 
 def jbig2_refagg_text_encode(base_symbols, variants, placements,
@@ -2341,212 +2175,8 @@ def jbig2_refagg_text_encode(base_symbols, variants, placements,
     contexts. Placements index base symbols, then variants, then
     aggregates (caller order), always top-left.
     Returns (stream, composed page rows)."""
-    aggregates = aggregates or []
-    # --- base dictionary (arithmetic, as jbig2_text_encode) ---------------
-    base_order = sorted(range(len(base_symbols)),
-                        key=lambda i: (len(base_symbols[i]),
-                                       len(base_symbols[i][0])))
-    enc = _MQEncoder()
-    gb_ctx: dict = {}
-    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    hcheight = 0
-    i = 0
-    while i < len(base_order):
-        hgt = len(base_symbols[base_order[i]])
-        _jb2_enc_int(enc, iadh, hgt - hcheight)
-        hcheight = hgt
-        symwidth = 0
-        while i < len(base_order) and len(base_symbols[base_order[i]]) == hgt:
-            wd = len(base_symbols[base_order[i]][0])
-            _jb2_enc_int(enc, iadw, wd - symwidth)
-            symwidth = wd
-            _jb2_generic_into(enc, gb_ctx, base_symbols[base_order[i]], wd)
-            i += 1
-        _jb2_enc_int(enc, iadw, None)
-    _jb2_enc_int(enc, iaex, 0)
-    _jb2_enc_int(enc, iaex, len(base_symbols))
-    at = bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE, 0x100 - 2, 0xFE])
-    sd1 = ((0).to_bytes(2, "big") + at
-           + len(base_symbols).to_bytes(4, "big")
-           + len(base_symbols).to_bytes(4, "big") + enc.flush())
-    base_remap = {orig: k for k, orig in enumerate(base_order)}
-
-    # --- refinement dictionary (SDREFAGG=1, refers to the base) ----------
-    # new entries: refine-1 variants and (optionally) REFAGGNINST>1
-    # aggregates, class-sorted together by (height, width)
-    def agg_canvas(a):
-        cw, ch, insts = a
-        canvas = [[False] * cw for _ in range(ch)]
-        for _bid, ax, ay, bmp in insts:
-            for yy, rrow in enumerate(bmp):
-                if 0 <= ay + yy < ch:
-                    for xx, v in enumerate(rrow):
-                        if v and 0 <= ax + xx < cw:
-                            canvas[ay + yy][ax + xx] = True
-        return canvas
-
-    entries = [("var", j, len(variants[j][1]), len(variants[j][1][0]))
-               for j in range(len(variants))]
-    entries += [("agg", k, aggregates[k][1], aggregates[k][0])
-                for k in range(len(aggregates))]
-    entry_order = sorted(range(len(entries)),
-                         key=lambda e: (entries[e][2], entries[e][3]))
-    n_in = len(base_symbols)
-    n_new = len(entries)
-    n_total = n_in + n_new
-    symcodelen = max(1, (n_total - 1).bit_length() if n_total > 1 else 1)
-    enc2 = _MQEncoder()
-    gr_ctx: dict = {}
-    iadh2, iadw2, iaex2 = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaai, iardx, iardy = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    # nested aggregate text regions get their OWN integer stats (only the
-    # GR store + IAID tree are shared with the dictionary — §6.5.8.2.1 as
-    # implemented by the reference's decodeThroughTextRegion/setContexts)
-    iadt2, iafs2, iads2 = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iari2, iardw2, iardh2 = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iardx2, iardy2 = _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_cx = [[0, 0] for _ in range(1 << (symcodelen + 1))]
-    hcheight = 0
-    i = 0
-    while i < len(entry_order):
-        e = entries[entry_order[i]]
-        hgt = e[2]
-        _jb2_enc_int(enc2, iadh2, hgt - hcheight)
-        hcheight = hgt
-        symwidth = 0
-        while i < len(entry_order) and entries[entry_order[i]][2] == hgt:
-            kind, j, _h, wd = entries[entry_order[i]]
-            _jb2_enc_int(enc2, iadw2, wd - symwidth)
-            symwidth = wd
-            if kind == "var":
-                base_id, bmp = variants[j]
-                _jb2_enc_int(enc2, iaai, 1)  # REFAGGNINST = 1
-                rid = base_remap[base_id]  # index into SDINSYMS
-                _jb2_enc_iaid(enc2, iaid_cx, symcodelen, rid)
-                _jb2_enc_int(enc2, iardx, 0)
-                _jb2_enc_int(enc2, iardy, 0)
-                ref = base_symbols[base_id]
-                _jb2_refine_into(enc2, gr_ctx, bmp, ref, wd, hgt,
-                                 len(ref[0]), len(ref), 0, 0, template=0)
-            else:
-                # aggregate: nested TL/strip-1/refined text region over
-                # the pool, shared contexts (§6.5.8.2.1)
-                cw, ch, insts = aggregates[j]
-                _jb2_enc_int(enc2, iaai, len(insts))
-                _jb2_enc_int(enc2, iadt2, 0)  # STRIPT init
-                stript = 0
-                firsts = 0
-                n_i = 0
-                by_t: dict = {}
-                for bid, ax, ay, bmp in insts:
-                    by_t.setdefault(ay, []).append((ax, bid, bmp))
-                for t in sorted(by_t):
-                    _jb2_enc_int(enc2, iadt2, t - stript)
-                    stript = t
-                    first = True
-                    curs = 0
-                    for ax, bid, bmp in sorted(by_t[t],
-                                               key=lambda z: z[0]):
-                        if first:
-                            _jb2_enc_int(enc2, iafs2, ax - firsts)
-                            firsts = ax
-                            curs = ax
-                            first = False
-                        else:
-                            _jb2_enc_int(enc2, iads2, ax - curs)
-                            curs = ax
-                        rid = base_remap[bid]
-                        _jb2_enc_iaid(enc2, iaid_cx, symcodelen, rid)
-                        _jb2_enc_int(enc2, iari2, 1)
-                        ref = base_symbols[bid]
-                        sw0, sh0 = len(ref[0]), len(ref)
-                        wi, hi = len(bmp[0]), len(bmp)
-                        _jb2_enc_int(enc2, iardw2, wi - sw0)
-                        _jb2_enc_int(enc2, iardh2, hi - sh0)
-                        _jb2_enc_int(enc2, iardx2, 0)
-                        _jb2_enc_int(enc2, iardy2, 0)
-                        _jb2_refine_into(enc2, gr_ctx, bmp, ref, wi, hi,
-                                         sw0, sh0, (wi - sw0) >> 1,
-                                         (hi - sh0) >> 1, template=0)
-                        curs += wi - 1
-                        n_i += 1
-                    if n_i < len(insts):
-                        _jb2_enc_int(enc2, iads2, None)
-            i += 1
-        _jb2_enc_int(enc2, iadw2, None)
-    _jb2_enc_int(enc2, iaex2, 0)
-    _jb2_enc_int(enc2, iaex2, n_total)  # export inputs + new
-    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF])  # GRAT nominal (-1,-1) x2
-    sd2 = ((0x0002).to_bytes(2, "big") + at + rat
-           + n_total.to_bytes(4, "big") + n_new.to_bytes(4, "big")
-           + enc2.flush())
-
-    # --- text region over the combined exports ---------------------------
-    # export order: base (base_order) then new entries (entry_order)
-    def entry_bitmap(e):
-        kind, j, _h, _w = e
-        return variants[j][1] if kind == "var" else agg_canvas(aggregates[j])
-
-    combined = [base_symbols[k] for k in base_order] + [
-        entry_bitmap(entries[k]) for k in entry_order]
-    remap = dict(base_remap)
-    for k, orig in enumerate(entry_order):
-        remap[n_in + orig] = n_in + k
-    symcodelen_t = max(1, (n_total - 1).bit_length() if n_total > 1 else 1)
-    enc3 = _MQEncoder()
-    iadt, iafs, iads = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_t = [[0, 0] for _ in range(1 << (symcodelen_t + 1))]
-    by_row: dict[int, list[tuple[int, int]]] = {}
-    for sym_id, x, y in placements:
-        by_row.setdefault(y, []).append((x, remap[sym_id]))
-    _jb2_enc_int(enc3, iadt, 0)
-    stript = 0
-    firsts = 0
-    n_inst = 0
-    total = len(placements)
-    for y in sorted(by_row):
-        _jb2_enc_int(enc3, iadt, y - stript)
-        stript = y
-        first = True
-        curs = 0
-        for x, sid in sorted(by_row[y]):
-            if first:
-                _jb2_enc_int(enc3, iafs, x - firsts)
-                firsts = x
-                curs = x
-                first = False
-            else:
-                _jb2_enc_int(enc3, iads, x - curs)
-                curs = x
-            _jb2_enc_iaid(enc3, iaid_t, symcodelen_t, sid)
-            curs += len(combined[sid][0]) - 1
-            n_inst += 1
-        if n_inst < total:
-            _jb2_enc_int(enc3, iads, None)
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    tr_data = (region_info + (1 << 4).to_bytes(2, "big")
-               + total.to_bytes(4, "big") + enc3.flush())
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 0, sd1)
-              + _jb2_segment_refs(3, 0, [2], sd2)
-              + _jb2_segment_refs(4, 6, [3], tr_data)
-              + _jb2_segment(5, 49, b""))
-    all_syms = list(base_symbols) + [entry_bitmap(e) for e in entries]
-    page = [[0] * cols for _ in range(nrows)]
-    for sym_id, x, y in placements:
-        sym = all_syms[sym_id]
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
+    return _jb2_refagg_encode(base_symbols, variants, placements, cols,
+                              nrows, aggregates, _jb2_refagg_arith_dict)
 
 
 def jbig2_huffman_refagg_encode(base_symbols, variants, placements,
@@ -2562,206 +2192,8 @@ def jbig2_huffman_refagg_encode(base_symbols, variants, placements,
     `aggregates` = [(canvas_w, canvas_h, [(base_id, x, y, refined_bmp)])]
     with |bmp dims − base dims| ≤ 2 (B.14 range). Returns
     (stream, composed page rows)."""
-    aggregates = aggregates or []
-    # --- base dictionary (arithmetic) ------------------------------------
-    base_order = sorted(range(len(base_symbols)),
-                        key=lambda i: (len(base_symbols[i]),
-                                       len(base_symbols[i][0])))
-    enc = _MQEncoder()
-    gb_ctx: dict = {}
-    iadh, iadw, iaex = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    hcheight = 0
-    i = 0
-    while i < len(base_order):
-        hgt = len(base_symbols[base_order[i]])
-        _jb2_enc_int(enc, iadh, hgt - hcheight)
-        hcheight = hgt
-        symwidth = 0
-        while i < len(base_order) and len(base_symbols[base_order[i]]) == hgt:
-            wd = len(base_symbols[base_order[i]][0])
-            _jb2_enc_int(enc, iadw, wd - symwidth)
-            symwidth = wd
-            _jb2_generic_into(enc, gb_ctx, base_symbols[base_order[i]], wd)
-            i += 1
-        _jb2_enc_int(enc, iadw, None)
-    _jb2_enc_int(enc, iaex, 0)
-    _jb2_enc_int(enc, iaex, len(base_symbols))
-    at = bytes([3 & 0xFF, 0xFF, 0x100 - 3, 0xFF, 2, 0xFE, 0x100 - 2, 0xFE])
-    sd1 = ((0).to_bytes(2, "big") + at
-           + len(base_symbols).to_bytes(4, "big")
-           + len(base_symbols).to_bytes(4, "big") + enc.flush())
-    base_remap = {orig: k for k, orig in enumerate(base_order)}
-
-    # --- Huffman refinement dictionary -----------------------------------
-    def agg_canvas(a):
-        cw, ch, insts = a
-        canvas = [[False] * cw for _ in range(ch)]
-        for _bid, ax, ay, bmp in insts:
-            for yy, rrow in enumerate(bmp):
-                if 0 <= ay + yy < ch:
-                    for xx, v in enumerate(rrow):
-                        if v and 0 <= ax + xx < cw:
-                            canvas[ay + yy][ax + xx] = True
-        return canvas
-
-    entries = [("var", j, len(variants[j][1]), len(variants[j][1][0]))
-               for j in range(len(variants))]
-    entries += [("agg", k, aggregates[k][1], aggregates[k][0])
-                for k in range(len(aggregates))]
-    entry_order = sorted(range(len(entries)),
-                         key=lambda e: (entries[e][2], entries[e][3]))
-    n_in = len(base_symbols)
-    n_new = len(entries)
-    n_total = n_in + n_new
-    symcodelen = max(1, (n_total - 1).bit_length() if n_total > 1 else 1)
-    bw = _JB2BitWriterMSB()
-    gr_ctx: dict = {}
-
-    def chunk_out(bmp, ref, wi, hi, sw0, sh0, dx, dy):
-        genc = _MQEncoder()
-        _jb2_refine_into(genc, gr_ctx, bmp, ref, wi, hi, sw0, sh0,
-                         dx, dy, template=0)
-        chunk = genc.flush()
-        _jb2_huff_put(bw, "B1", len(chunk))  # BMSIZE
-        bw.align()
-        bw.out.extend(chunk)
-
-    hcheight = 0
-    i = 0
-    while i < len(entry_order):
-        hgt = entries[entry_order[i]][2]
-        _jb2_huff_put(bw, "B4", hgt - hcheight)  # DH (B.4: ≥ 1)
-        hcheight = hgt
-        symwidth = 0
-        while i < len(entry_order) and entries[entry_order[i]][2] == hgt:
-            kind, j, _h, wd = entries[entry_order[i]]
-            _jb2_huff_put(bw, "B2", wd - symwidth)  # DW (B.2: ≥ 0)
-            symwidth = wd
-            if kind == "var":
-                base_id, bmp = variants[j]
-                _jb2_huff_put(bw, "B1", 1)  # REFAGGNINST
-                bw.write(base_remap[base_id], symcodelen)  # raw ID
-                _jb2_huff_put(bw, "B15", 0)  # RDX
-                _jb2_huff_put(bw, "B15", 0)  # RDY
-                ref = base_symbols[base_id]
-                # SD refined symbols: GRREFERENCEDX = RDX directly
-                chunk_out(bmp, ref, wd, hgt, len(ref[0]), len(ref), 0, 0)
-            else:
-                cw, ch, insts = aggregates[j]
-                _jb2_huff_put(bw, "B1", len(insts))  # REFAGGNINST > 1
-                _jb2_huff_put(bw, "B11", 1)  # STRIPT init → −1
-                stript = -1
-                firsts = 0
-                n_i = 0
-                by_t: dict = {}
-                for bid, ax, ay, bmp in insts:
-                    by_t.setdefault(ay, []).append((ax, bid, bmp))
-                for t in sorted(by_t):
-                    _jb2_huff_put(bw, "B11", t - stript)  # DT ≥ 1
-                    stript = t
-                    first = True
-                    curs = 0
-                    for ax, bid, bmp in sorted(by_t[t],
-                                               key=lambda z: z[0]):
-                        if first:
-                            _jb2_huff_put(bw, "B6", ax - firsts)
-                            firsts = ax
-                            curs = ax
-                            first = False
-                        else:
-                            _jb2_huff_put(bw, "B8", ax - curs)
-                            curs = ax
-                        bw.write(base_remap[bid], symcodelen)  # raw ID
-                        bw.write(1, 1)  # RI
-                        ref = base_symbols[bid]
-                        sw0, sh0 = len(ref[0]), len(ref)
-                        wi, hi = len(bmp[0]), len(bmp)
-                        _jb2_huff_put(bw, "B14", wi - sw0)  # RDW
-                        _jb2_huff_put(bw, "B14", hi - sh0)  # RDH
-                        _jb2_huff_put(bw, "B14", 0)  # RDX
-                        _jb2_huff_put(bw, "B14", 0)  # RDY
-                        # §6.4.11 instances add floor(RDW/2)/floor(RDH/2)
-                        chunk_out(bmp, ref, wi, hi, sw0, sh0,
-                                  (wi - sw0) >> 1, (hi - sh0) >> 1)
-                        curs += wi - 1
-                        n_i += 1
-                    if n_i < len(insts):
-                        _jb2_huff_put(bw, "B8", None)  # end of strip
-            i += 1
-        _jb2_huff_put(bw, "B2", None)  # OOB: end of height class
-    _jb2_huff_put(bw, "B1", 0)          # export skip-run
-    _jb2_huff_put(bw, "B1", n_total)    # export inputs + new
-    rat = bytes([0xFF, 0xFF, 0xFF, 0xFF])  # GRAT nominal (−1,−1) ×2
-    # flags: SDHUFF=1, SDREFAGG=1, DH=B.4(0), DW=B.2(0), BM=B.1(0),
-    # AGG=B.1(0), SDRTEMPLATE=0
-    sd2 = ((0x0003).to_bytes(2, "big") + rat
-           + n_total.to_bytes(4, "big") + n_new.to_bytes(4, "big")
-           + bw.flush())
-
-    # --- text region over the combined exports ---------------------------
-    def entry_bitmap(e):
-        kind, j, _h, _w = e
-        return variants[j][1] if kind == "var" else agg_canvas(aggregates[j])
-
-    combined = [base_symbols[k] for k in base_order] + [
-        entry_bitmap(entries[k]) for k in entry_order]
-    remap = dict(base_remap)
-    for k, orig in enumerate(entry_order):
-        remap[n_in + orig] = n_in + k
-    enc3 = _MQEncoder()
-    iadt, iafs, iads = _jb2_int_ctx(), _jb2_int_ctx(), _jb2_int_ctx()
-    iaid_t = [[0, 0] for _ in range(1 << (symcodelen + 1))]
-    by_row: dict[int, list[tuple[int, int]]] = {}
-    for sym_id, x, y in placements:
-        by_row.setdefault(y, []).append((x, remap[sym_id]))
-    _jb2_enc_int(enc3, iadt, 0)
-    stript = 0
-    firsts = 0
-    n_inst = 0
-    total = len(placements)
-    for y in sorted(by_row):
-        _jb2_enc_int(enc3, iadt, y - stript)
-        stript = y
-        first = True
-        curs = 0
-        for x, sid in sorted(by_row[y]):
-            if first:
-                _jb2_enc_int(enc3, iafs, x - firsts)
-                firsts = x
-                curs = x
-                first = False
-            else:
-                _jb2_enc_int(enc3, iads, x - curs)
-                curs = x
-            _jb2_enc_iaid(enc3, iaid_t, symcodelen, sid)
-            curs += len(combined[sid][0]) - 1
-            n_inst += 1
-        if n_inst < total:
-            _jb2_enc_int(enc3, iads, None)
-    region_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                   + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                   + bytes([0]))
-    tr_data = (region_info + (1 << 4).to_bytes(2, "big")
-               + total.to_bytes(4, "big") + enc3.flush())
-    page_info = (cols.to_bytes(4, "big") + nrows.to_bytes(4, "big")
-                 + (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-                 + bytes([0x01]) + (0).to_bytes(2, "big"))
-    stream = (_jb2_segment(1, 48, page_info)
-              + _jb2_segment(2, 0, sd1)
-              + _jb2_segment_refs(3, 0, [2], sd2)
-              + _jb2_segment_refs(4, 6, [3], tr_data)
-              + _jb2_segment(5, 49, b""))
-    all_syms = list(base_symbols) + [entry_bitmap(e) for e in entries]
-    page = [[0] * cols for _ in range(nrows)]
-    for sym_id, x, y in placements:
-        sym = all_syms[sym_id]
-        for yy, srow in enumerate(sym):
-            if 0 <= y + yy < nrows:
-                prow = page[y + yy]
-                for xx, v in enumerate(srow):
-                    if v and 0 <= x + xx < cols:
-                        prow[x + xx] = 1
-    return stream, page
+    return _jb2_refagg_encode(base_symbols, variants, placements, cols,
+                              nrows, aggregates, _jb2_refagg_huffman_dict)
 
 
 # a custom DW table spec (structure exercises type-53 table segments):

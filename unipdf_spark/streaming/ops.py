@@ -243,7 +243,14 @@ def streaming_render_extract_reassemble(docs: DataFrame,
     sampling pass a stream cannot do), then reassemble per doc via a
     stateless applyInPandasWithState group step. Small docs take the
     map-only branch; a 1 MB document in a micro-batch no longer holds the
-    trigger hostage on one core."""
+    trigger hostage on one core.
+
+    The result cannot feed ``streaming_minhash_candidates`` in the same
+    query: the oversized-doc branch is itself an applyInPandasWithState
+    step, and Spark rejects a query holding two ("Multiple
+    applyInPandasWithStates are not supported"). To dedup streamed
+    extractions, run the map-only branch (``map_rows(docs, _rex_whole,
+    REX_DDL)``) into the candidate stage instead."""
     from ..operators.extracted import (PART_CHARS, REX_DDL, _rex_part,
                                        _rex_whole, _split_oversized)
     from ..pipeline import map_rows
